@@ -579,8 +579,10 @@ def main():
                 c2s.append(c2r.run_once())
                 c8s.append(c8r.run_once())
                 if i + 1 >= pairs and i + 1 < max_pairs:
-                    new2 = w2s[-1] < min(w2s[:-1]) * 0.98
-                    new8 = w8s[-1] < min(w8s[:-1]) * 0.98
+                    # a first pair has no earlier floor to improve on
+                    # (SPARK_GRAFT_PAIR_ROUNDS=1): stop, as for no gain
+                    new2 = bool(w2s[:-1]) and w2s[-1] < min(w2s[:-1]) * 0.98
+                    new8 = bool(w8s[:-1]) and w8s[-1] < min(w8s[:-1]) * 0.98
                     if not (new2 or new8):
                         break
         finally:

@@ -144,7 +144,11 @@ class SnapshotCatalog:
         if not live:
             if schema is None:
                 raise ValueError(f"table {name!r} is empty and no schema given")
-            return spark.createDataFrame([], schema)
+            # a false filter makes the emptiness optimizer-visible (it
+            # prunes to an empty LocalRelation): a join against an empty
+            # table — the first crawl wave's pending anti-join — then
+            # plans away instead of shuffling an opaque empty RDD scan
+            return spark.createDataFrame([], schema).where("false")
 
         def read_one(s: dict):
             path = os.path.join(self._table_dir(name), s["dir"])

@@ -6,8 +6,9 @@ Replaces the reference's sequential handler loop (app/main.py:13–64) with:
     repeat per wave:
         pending  = frontier ⟕̸ fetch_log           (anti-join: not yet fetched)
         popped   = top-k per host by the ordering law (priority.pop_wave)
-        fetched  = mapInPandas fetch w/ politeness (fetch.fetch_wave)
-        parsed   = vectorized family parsers       (parse.parse_wave)
+        parsed   = ONE mapInPandas stage: fetch w/ politeness, then the
+                   vectorized family parsers        (parse.fused_fetch_parse)
+        stop if popped was empty (no text/error rows) — nothing committed
         append records / pages-text / fetch_log
         children = discovered URLs, deduped against everything enqueued
                    (exact anti-join or Bloom fast path) → append to frontier
@@ -21,8 +22,11 @@ wave marker (resume()); re-fetching never happens because fetch_log is the
 source of truth for "done" (north rule: resumable mid-frontier).
 
 Shuffle budget per wave: one hash shuffle for the per-host window pop, one
-repartition(salted_part) for fetch — matching SURVEY.md §4.4's "exactly
-two shuffles per wave".
+repartition(salted_part) for the fused fetch+parse stage — matching
+SURVEY.md §4.4's "exactly two shuffles per wave" — and one Python stage
+(the fetched payloads never leave the worker that fetched them). The
+pending anti-join is evaluated once per wave: the wave's own pop is the
+termination test, not a separate emptiness probe.
 """
 
 from __future__ import annotations
@@ -36,8 +40,10 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions import urlkit
 from ..catalog import SnapshotCatalog
-from ..parsers.parse import parse_wave
-from .fetch import fetch_wave
+# fetch_wave / parse_wave: the two-stage API, re-exported for callers that
+# wrap the crawler's stage functions by module attribute
+from ..parsers.parse import fused_fetch_parse, parse_wave  # noqa: F401
+from .fetch import fetch_wave  # noqa: F401
 from .priority import pop_wave, seeds_to_frontier
 from .seen import filter_unseen_bloom, filter_unseen_exact
 
@@ -234,8 +240,12 @@ class Crawler:
         return last + 1
 
     # -- one wave ------------------------------------------------------------
-    def run_wave(self, wave: int) -> WaveStats:
-        t0 = time.monotonic()
+    def wave_plan(self, wave: int) -> DataFrame:
+        """The wave's lazy plan: pending → pop → robots verdict → ONE fused
+        fetch+parse Python stage (PARSE_OUT_SCHEMA rows). Two shuffles
+        beyond those of the pending anti-join (none on the first wave,
+        whose fetch_log is empty): the per-host window pop and the salted
+        fetch repartition."""
         pending = self.pending()
         if self.cat.exists("host_rank"):
             from ..operators.graph import reprioritize_frontier
@@ -250,32 +260,26 @@ class Crawler:
         ).withColumn("wave", F.lit(wave))
 
         # robots gate (north rule; absent in the reference, default-allow
-        # to preserve crawl parity). Denied URLs are logged, not refetched;
-        # Crawl-delay rides the gate's broadcast join onto the wave as a
-        # per-row rate_override column (req/s) — the robots table is never
-        # collected driver-side (10^8 hosts ≈ 10 GB at target scale).
-        allowed = None
-        denied = None
+        # to preserve crawl parity). The gate only FLAGS rows: the fetch
+        # stage logs a denied URL as a 451 error row without requesting
+        # it, so allowed and denied URLs come from one evaluation of the
+        # pop. Crawl-delay rides the gate's broadcast join onto the wave
+        # as a per-row rate_override column (req/s) — the robots table is
+        # never collected driver-side (10^8 hosts ≈ 10 GB at target scale).
         if self.cat.exists("robots"):
             from .robots import robots_gate
 
             robots = self.cat.read(self.spark, "robots", schema=schemas.ROBOTS)
-            allowed = (
-                robots_gate(popped, robots, default_allow=True)
+            popped = (
+                robots_gate(popped, robots, default_allow=True, flag="robots_allow")
                 .withColumn(
                     "rate_override",
                     F.when(F.col("crawl_delay") > 0, 1.0 / F.col("crawl_delay")),
                 )
                 .drop("crawl_delay")
-                .cache()
             )
-            # denied rows ride the wave's single fetch_log write below —
-            # a standalone emptiness probe would add one Spark action per
-            # wave even with zero denials
-            denied = popped.join(allowed.select("url"), "url", "left_anti")
-            popped = allowed
 
-        fetched = fetch_wave(
+        return fused_fetch_parse(
             popped,
             self.fetcher_factory,
             num_parts=self.num_parts,
@@ -283,8 +287,20 @@ class Crawler:
             salt=self.salt,
             simulated_clock=self.simulated_clock,
         )
-        parsed = parse_wave(fetched).cache()
 
+    def run_wave(self, wave: int) -> WaveStats | None:
+        """Run and commit one wave; None (and nothing committed) when the
+        pop is empty, i.e. the crawl is done."""
+        t0 = time.monotonic()
+        parsed = self.wave_plan(wave).cache()
+        try:
+            return self._commit_wave(wave, parsed, t0)
+        finally:
+            # an aborted wave (resume() pattern) must not pin cached
+            # DataFrames in the session for its lifetime
+            parsed.unpersist()
+
+    def _commit_wave(self, wave: int, parsed: DataFrame, t0: float) -> WaveStats | None:
         # ONE wall-clock per wave, fixed driver-side: F.current_timestamp()
         # is per-action, and the wave runs several actions — records and
         # pages must share the same run_ts (the reference calls timenow()
@@ -297,7 +313,10 @@ class Crawler:
         # ONE action over the cached parse output yields every per-kind
         # count the wave needs (records/pages emptiness gates + ok/failed
         # stats) — three separate counting jobs otherwise dominate the
-        # per-wave fixed cost at small wave sizes.
+        # per-wave fixed cost at small wave sizes. Every popped URL yields
+        # exactly one text or error row (robots denials included), so
+        # ok + failed == 0 is the crawl's termination test: no separate
+        # pending probe.
         kind_stats = (
             parsed.groupBy("kind", (F.col("status") == 200).alias("ok"))
             .count()
@@ -311,6 +330,8 @@ class Crawler:
         failed = sum(
             r["count"] for r in kind_stats if r["kind"] in ("error", "text") and not r["ok"]
         )
+        if ok + failed == 0:
+            return None
 
         # records PARTITIONED BY (state, layout) — the engine analog of
         # the reference's {state}/layout_{id}/ CSV path (app/main.py:29)
@@ -332,21 +353,8 @@ class Crawler:
 
         log = parsed.filter(F.col("kind").isin("error", "text")).select(
             "url", "wave", run_ts.alias("ts"), "status", "reason",
-            F.lit(None).cast("long").alias("bytes"),
-            F.lit(None).cast("int").alias("partition_id"),
-            "emc", "state", "layout",
+            "bytes", "partition_id", "emc", "state", "layout",
         )
-        if denied is not None:
-            log = log.unionByName(
-                denied.select(
-                    "url", F.lit(wave).alias("wave"), run_ts.alias("ts"),
-                    F.lit(451).alias("status"),
-                    F.lit("robots disallow").alias("reason"),
-                    F.lit(None).cast("long").alias("bytes"),
-                    F.lit(None).cast("int").alias("partition_id"),
-                    "emc", "state", "layout",
-                )
-            )
 
         # The three table commits are independent (different tables →
         # different manifests; all read the CACHED parse output) and each
@@ -416,27 +424,19 @@ class Crawler:
                 fresh.unpersist()
             return n
 
-        try:
-            with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
-                child_fut = pool.submit(child_chain)
-                for fut in [pool.submit(w) for w in writes]:
-                    fut.result()  # propagate the first failure, wave aborts
-                n_children = child_fut.result()
+        with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
+            child_fut = pool.submit(child_chain)
+            for fut in [pool.submit(w) for w in writes]:
+                fut.result()  # propagate the first failure, wave aborts
+            n_children = child_fut.result()
 
-            n_popped = ok + failed
-            wall = time.monotonic() - t0
-            ws = WaveStats(wave, n_popped, ok, failed, n_records, n_children, wall)
-            marker = self.spark.createDataFrame(
-                [(wave, n_popped, ok, failed, n_records, n_children, wall)], WAVES_SCHEMA
-            )
-            self.cat.write("waves", marker, wave=wave)  # the wave commit point
-        finally:
-            # an aborted wave (resume() pattern) must not pin cached
-            # DataFrames in the session for its lifetime
-            parsed.unpersist()
-            if allowed is not None:
-                allowed.unpersist()
-        return ws
+        n_popped = ok + failed
+        wall = time.monotonic() - t0
+        marker = self.spark.createDataFrame(
+            [(wave, n_popped, ok, failed, n_records, n_children, wall)], WAVES_SCHEMA
+        )
+        self.cat.write("waves", marker, wave=wave)  # the wave commit point
+        return WaveStats(wave, n_popped, ok, failed, n_records, n_children, wall)
 
     def compact(self) -> None:
         """Long-crawl maintenance: rewrite every table's live state as one
@@ -455,7 +455,8 @@ class Crawler:
         out = []
         wave = self.last_committed_wave() + 1 if self.cat.exists("waves") else 1
         for w in range(wave, wave + max_waves):
-            if self.pending().limit(1).count() == 0:
+            ws = self.run_wave(w)
+            if ws is None:  # empty pop: the crawl is done
                 break
-            out.append(self.run_wave(w))
+            out.append(ws)
         return out

@@ -43,8 +43,16 @@ def parse_robots_txt(body: str, user_agent: str = "*") -> tuple[list[str], float
     return disallow, delay
 
 
-def robots_gate(candidates: DataFrame, robots: DataFrame, default_allow: bool = True) -> DataFrame:
-    """Filter candidate URLs through the robots cache.
+def robots_gate(
+    candidates: DataFrame,
+    robots: DataFrame,
+    default_allow: bool = True,
+    flag: str | None = None,
+) -> DataFrame:
+    """Filter candidate URLs through the robots cache — or, with ``flag``
+    set, keep every candidate and put the verdict in that boolean column
+    (the crawler fetches the allowed rows and logs the denied ones from
+    the same frame, so the wave's pop is evaluated once).
 
     ``robots`` columns: host, rules (JSON array of disallow prefixes),
     allow_all ('allow'|'deny'|'rules'). Missing host → default policy.
@@ -75,9 +83,13 @@ def robots_gate(candidates: DataFrame, robots: DataFrame, default_allow: bool = 
         .when(F.col("__r_policy") == "deny", F.lit(False))
         .otherwise(~denied_by_rules)
     )
+    # a NULL verdict denies in both forms, as filter() drops it
+    gated = (
+        joined.withColumn(flag, F.coalesce(allowed, F.lit(False)))
+        if flag else joined.filter(allowed)
+    )
     return (
-        joined.filter(allowed)
-        .withColumn("crawl_delay", F.col("__r_delay"))
+        gated.withColumn("crawl_delay", F.col("__r_delay"))
         .drop("__r_host", "__r_policy", "__r_disallow", "__r_delay")
     )
 

@@ -24,21 +24,21 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..frontier.fetch import _IN_COLS, fetch_stage
 from ..sources.fixtures import endpoint_kind
 from .families import canonical_text, parse_payload
 
 PARSE_OUT_SCHEMA = (
     "url string, host string, state string, layout string, emc string, "
     "family string, depth int, event_seq int, seed_seq int, child_seq int, "
-    "wave int, kind string, level string, data string, text string, "
-    "child_url string, child_rank int, status int, reason string"
+    "wave int, bytes long, partition_id int, kind string, level string, "
+    "data string, text string, child_url string, child_rank int, "
+    "status int, reason string"
 )
 
-_CARRY = [
-    "url", "host", "state", "layout", "emc", "family",
-    "depth", "event_seq", "seed_seq", "child_seq", "wave",
-]
-
+# every output row carries its page's fetch metadata (fetch_log's bytes and
+# partition_id come from the page's text/error row)
+_CARRY = [*_IN_COLS, "bytes", "partition_id"]
 
 _OUT_COLS = [*_CARRY, "kind", "level", "data", "text", "child_url", "child_rank", "status", "reason"]
 
@@ -93,74 +93,24 @@ def fused_fetch_parse(
     salt: int = 1,
     simulated_clock: bool = True,
 ) -> DataFrame:
-    """Fetch AND parse in ONE mapInPandas stage.
+    """Fetch AND parse in ONE mapInPandas stage — the stage every
+    ``Crawler`` wave runs.
 
     The two-stage form (fetch_wave → parse_wave) round-trips every raw
     html payload through Arrow twice and runs two Python workers per
     task; fusing halves the Python process count and removes the biggest
     serde hop — raw payload bytes never leave the worker that fetched
-    them. Use the two-stage form only when raw html must be persisted.
+    them. The fetch half is ``frontier.fetch.fetch_stage`` itself, so the
+    ordering law, the chunking, the pacing and the optional
+    ``rate_override`` / ``n_lanes`` / ``robots_allow`` columns behave
+    exactly as in ``fetch_wave``. Use the two-stage form only when raw
+    html must be persisted.
     """
-    from pyspark import TaskContext
-
-    from ..frontier.fetch import _IN_COLS
-    from ..frontier.politeness import HostPacer
-
-    has_lanes_col = "n_lanes" in popped.columns
-    in_cols = _IN_COLS + (["n_lanes"] if has_lanes_col else [])
-    part = popped.repartition(num_parts, "salted_part").select(*in_cols)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetcher = fetcher_factory()
-        pacer = HostPacer(rate_per_host, salt=salt, sim=simulated_clock)
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        # The ordering law is per-PARTITION: buffer the whole partition's
-        # metadata rows (input rows here are ~100 bytes — no payloads yet)
-        # and sort once, exactly like fetch_wave — a partition larger than
-        # one Arrow batch must not fall back to batch-local order. Fetched
-        # payloads are still bounded: the sorted frame is walked in
-        # 10k-row chunks, each fetched, parsed and yielded before the next
-        # starts, so peak task memory is O(chunk payloads).
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        pdf = pdf.sort_values(
-            ["event_seq", "seed_seq", "depth", "child_seq", "url"]
-        ).reset_index(drop=True)
-        for lo in range(0, len(pdf), 10_000):
-            batch = pdf.iloc[lo : lo + 10_000].reset_index(drop=True).copy()
-            status, reason, html = [], [], []
-            # hoist per-row conversions out of the fetch loop: iterate
-            # native Python lists (zip over pandas Series yields numpy
-            # scalars) and precompute the lane divisors vectorized
-            # instead of a pd.isna() call per row
-            if has_lanes_col:
-                lanes_l = [
-                    None if pd.isna(x) else int(x) for x in batch["n_lanes"].tolist()
-                ]
-            else:
-                lanes_l = [None] * len(batch)
-            acquire = pacer.acquire
-            for url, h, fam, ln in zip(
-                batch["url"].tolist(), batch["host"].tolist(),
-                batch["family"].tolist(), lanes_l,
-            ):
-                acquire(h, lanes=ln)
-                try:
-                    s, r, payload = fetcher(url, fam)
-                except Exception as e:
-                    s, r, payload = 599, str(e), None
-                status.append(s)
-                reason.append(r)
-                html.append(payload)
-            batch["status"] = status
-            batch["reason"] = reason
-            batch["html"] = html
-            yield _parse_fetched_batch(batch)
-
-    return part.mapInPandas(run, PARSE_OUT_SCHEMA)
+    return fetch_stage(
+        popped, fetcher_factory, PARSE_OUT_SCHEMA, _parse_fetched_batch,
+        num_parts=num_parts, rate_per_host=rate_per_host, salt=salt,
+        simulated_clock=simulated_clock,
+    )
 
 
 def parse_wave(fetched: DataFrame) -> DataFrame:

@@ -40,16 +40,20 @@ def assert_broadcast_join(df: DataFrame, n_min: int = 1) -> None:
 
 import re
 
-_EXCHANGE_HDR = re.compile(r"^\(\d+\) Exchange\b")
+
+def count_nodes(df: DataFrame, node: str) -> int:
+    """Number of ``node`` operators in the static physical plan. Counts
+    the formatted plan's detail headers `(N) <node>` so tree+detail
+    aren't double-counted; a header only matches the exact operator name
+    (``Exchange`` never counts a BroadcastExchange or ReusedExchange)."""
+    hdr = re.compile(rf"^\(\d+\) {re.escape(node)}\b")
+    return sum(1 for line in formatted_plan(df).splitlines() if hdr.match(line.strip()))
 
 
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan (AQE may collapse
-    some at runtime; this counts the static plan). Counts the formatted
-    plan's detail headers `(N) Exchange` so tree+detail aren't
-    double-counted; Broadcast/Reused exchanges excluded."""
-    plan = formatted_plan(df)
-    return sum(1 for line in plan.splitlines() if _EXCHANGE_HDR.match(line.strip()))
+    some at runtime; this counts the static plan)."""
+    return count_nodes(df, "Exchange")
 
 
 def assert_whole_stage_codegen(df: DataFrame) -> None:

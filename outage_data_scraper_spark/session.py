@@ -13,6 +13,24 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+MIN_CODEGEN_CACHE = 4096
+
+
+def codegen_cache_entries() -> int:
+    """``SPARK_GRAFT_CODEGEN_CACHE`` (default 8192), validated: an int of
+    at least MIN_CODEGEN_CACHE, else ValueError — a smaller or malformed
+    value would silently bring back the codegen-cache churn documented
+    in get_spark (or fail only later, at JVM session build)."""
+    raw = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = -1
+    if n < MIN_CODEGEN_CACHE:
+        raise ValueError(
+            f"SPARK_GRAFT_CODEGEN_CACHE must be an int >= {MIN_CODEGEN_CACHE}, got {raw!r}"
+        )
+    return n
 
 
 def get_spark(
@@ -55,10 +73,7 @@ def get_spark(
         # it bounds compiled-class count, never data, so results and
         # scale behavior are unchanged (a production driver running a
         # query mix wants the same headroom).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", str(codegen_cache_entries()))
         # partition columns stay strings — snapshot unions must not see
         # a layout='8' directory flip to int via type inference
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")

@@ -120,6 +120,8 @@ def soak_loop(spark, cat, c, args, start_wave: int, kill_wave: int | None):
     waves = []
     for w in range(start_wave, args.waves + 1):
         ws = c.run_wave(w)
+        if ws is None:  # frontier exhausted: nothing was committed
+            break
         waves.append(ws)
         print(f"wave {w}: popped={ws.popped} ok={ws.ok} failed={ws.failed} "
               f"records={ws.records} children={ws.children} wall={ws.wall_s:.1f}s",

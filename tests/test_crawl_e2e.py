@@ -526,3 +526,121 @@ def test_domain_cut_histogram_equals_naive_rank(spark):
                 .collect()
             )
             assert got == ref, (trial, budget)
+
+
+def _manifests(root) -> dict:
+    import pathlib
+
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(pathlib.Path(root).rglob("_manifest.json"))
+    }
+
+
+def test_fetch_log_bytes_and_partition_id(spark, crawled):
+    """The fused fetch+parse stage fills fetch_log.bytes (payload length)
+    and fetch_log.partition_id (the fetch task's partition)."""
+    c, _ = crawled
+    family = {r.url: r.family for r in c.frontier().select("url", "family").collect()}
+    rows = c.fetch_log().select("url", "status", "bytes", "partition_id").collect()
+    assert rows
+    for r in rows:
+        assert r.partition_id is not None and 0 <= r.partition_id < 8, r
+        assert r.bytes is not None and r.bytes >= 0, r
+        if r.status == 200:
+            assert r.bytes == len(fixtures.render(r.url, family[r.url])), r
+        else:
+            assert r.bytes == 0, r
+
+
+@pytest.mark.parametrize(
+    "budget", [{}, {"wave_budget": 8}, {"domain_budget": 8}], ids=["plain", "wave", "domain"]
+)
+def test_run_on_finished_crawl_commits_nothing(spark, tmp_path_factory, budget):
+    """Once the pop is empty, run_wave returns None and run() returns []
+    without writing a single snapshot (no fetch_log, frontier or waves
+    commit for the empty wave)."""
+    root = str(tmp_path_factory.mktemp("crawl-finished"))
+    c, _ = crawl(spark, root, **budget)
+    assert {r.url for r in c.fetch_log().select("url").collect()} == set(
+        reference_order(spark)
+    )
+    before = _manifests(root)
+    last = c.last_committed_wave()
+    assert c.run(max_waves=5) == []
+    assert c.run_wave(last + 1) is None
+    assert _manifests(root) == before
+    assert c.last_committed_wave() == last
+
+
+def test_run_evaluates_pending_once_per_wave(spark, tmp_path_factory):
+    """run() has no separate emptiness probe: every wave (the final, empty
+    one included) builds pending() exactly once, inside its own pop."""
+    root = str(tmp_path_factory.mktemp("crawl-pending-count"))
+    cat = SnapshotCatalog(root)
+    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=4, num_parts=8,
+                rate_per_host=100.0)
+    c.bootstrap(fixture_miniweb_seeds(spark))
+    calls = []
+    real_pending = c.pending
+    c.pending = lambda: calls.append(1) or real_pending()
+    stats = c.run(max_waves=30)
+    assert stats and len(calls) == len(stats) + 1
+
+
+def _robots_for_all_hosts(spark, c, policy: str, crawl_delay):
+    hosts = [r.host for r in c.frontier().select("host").distinct().collect()]
+    return spark.createDataFrame(
+        [(h, "2024-08-01 00:00:00", None, policy, crawl_delay) for h in hosts],
+        "host string, fetched_ts string, rules string, allow_all string, crawl_delay double",
+    ).withColumn("fetched_ts", F.to_timestamp("fetched_ts"))
+
+
+def test_robots_deny_all_commits_451_wave_then_terminates(spark, tmp_path_factory):
+    """A wave whose every popped URL is robots-denied is not an empty
+    wave: it commits its 451 rows (with bytes 0 and a fetch partition),
+    and the next run() finds nothing pending and stops."""
+    root = str(tmp_path_factory.mktemp("crawl-deny-all"))
+    cat = SnapshotCatalog(root)
+    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=100, num_parts=8,
+                rate_per_host=100.0)
+    c.bootstrap(fixture_miniweb_seeds(spark))
+    cat.write("robots", _robots_for_all_hosts(spark, c, "deny", None))
+    n_seeds = c.frontier().count()
+
+    stats = c.run(max_waves=10)
+    assert [(s.wave, s.popped, s.ok, s.failed, s.records) for s in stats] == [
+        (1, n_seeds, 0, n_seeds, 0)
+    ]
+    log = c.fetch_log().collect()
+    assert len(log) == n_seeds
+    assert {(r.status, r.reason, r.bytes) for r in log} == {(451, "robots disallow", 0)}
+    assert all(0 <= r.partition_id < 8 for r in log)
+    assert not cat.exists("pages")
+
+    before = _manifests(root)
+    assert c.run(max_waves=10) == []
+    assert _manifests(root) == before
+
+
+def test_crawl_delay_robots_table_keeps_crawl_output(spark, crawled, tmp_path_factory):
+    """Crawl-delay only paces (simulated clock): a crawl under a robots
+    table that sets a delay for every host fetches the same URL set and
+    extracts byte-identical page texts as the crawl without one."""
+    _, cat1 = crawled
+    root = str(tmp_path_factory.mktemp("crawl-delay"))
+    cat2 = SnapshotCatalog(root)
+    c2 = Crawler(spark, cat2, make_fixture_fetcher, per_host_k=4, num_parts=8,
+                 rate_per_host=100.0)
+    c2.bootstrap(fixture_miniweb_seeds(spark))
+    cat2.write("robots", _robots_for_all_hosts(spark, c2, "allow", 5.0))
+    c2.run(max_waves=30)
+
+    def fetched(cat):
+        return {r.url for r in cat.read(spark, "fetch_log").select("url").collect()}
+
+    def texts(cat):
+        return {r.url: r.text for r in cat.read(spark, "pages").select("url", "text").collect()}
+
+    assert fetched(cat2) == fetched(cat1)
+    assert texts(cat2) == texts(cat1)

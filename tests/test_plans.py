@@ -5,6 +5,7 @@ must demonstrably push filters/columns into the parquet scan and broadcast
 dimensions (SURVEY.md §4.2) — checked here against the real plans.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from outage_data_scraper_spark.plans import (
@@ -12,6 +13,7 @@ from outage_data_scraper_spark.plans import (
     assert_pushed_filter,
     assert_whole_stage_codegen,
     count_exchanges,
+    count_nodes,
 )
 from outage_data_scraper_spark.plans.explain import assert_column_pruned
 
@@ -157,21 +159,26 @@ def test_records_partition_pruning(spark, tmp_path):
     assert q.count() > 0
 
 
-def test_crawl_wave_two_shuffle_budget(spark):
+def test_crawl_wave_two_shuffle_budget(spark, tmp_path):
     """SURVEY.md §4.4: exactly two shuffles per wave — the host window pop
-    and the salted repartition for fetch. The fused fetch+parse chain must
-    not add more."""
-    from outage_data_scraper_spark.frontier.priority import pop_wave, seeds_to_frontier
-    from outage_data_scraper_spark.parsers.parse import fused_fetch_parse
+    and the salted repartition for fetch — and ONE Python stage: the plan
+    Crawler.run_wave executes fuses fetch and parse in a single
+    MapInPandas. Planned at the first wave, where the empty fetch_log
+    prunes the pending anti-join (later waves add that join's own
+    shuffles on the fetch_log side)."""
+    from outage_data_scraper_spark.catalog import SnapshotCatalog
+    from outage_data_scraper_spark.frontier.crawler import Crawler
     from outage_data_scraper_spark.sources.fixtures import make_fixture_fetcher
     from outage_data_scraper_spark.sources.seeds import synthetic_seeds
 
-    frontier = seeds_to_frontier(synthetic_seeds(spark, 2000, 100))
-    popped = pop_wave(frontier, per_host_k=100, num_parts=8, salt=4)
-    parsed = fused_fetch_parse(popped, make_fixture_fetcher, num_parts=8,
-                               rate_per_host=1e9, salt=4)
-    n = count_exchanges(parsed)
+    c = Crawler(spark, SnapshotCatalog(str(tmp_path / "cat")), make_fixture_fetcher,
+                per_host_k=100, num_parts=8, salt=4, rate_per_host=1e9)
+    c.bootstrap(synthetic_seeds(spark, 2000, 100))
+    wave = c.wave_plan(1)
+    n = count_exchanges(wave)
     assert n == 2, f"crawl wave plans {n} shuffles (budget: 2)"
+    n_py = count_nodes(wave, "MapInPandas")
+    assert n_py == 1, f"crawl wave plans {n_py} Python map stages (budget: 1)"
 
 
 def test_minhash_lsh_plan_spreads_before_signature(spark):
@@ -558,3 +565,26 @@ def test_codegen_cache_sized_for_query_mix(spark):
     re-execution — r8 A/B: ~35% of the headline wall was janino churn).
     """
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 4096
+
+
+@pytest.mark.parametrize("value", ["4095", "-8192", "abc", "8192.0"])
+def test_codegen_cache_env_rejects_values_below_the_pin(monkeypatch, value):
+    """SPARK_GRAFT_CODEGEN_CACHE is validated before any session is
+    built: anything but an int >= 4096 raises instead of silently
+    undercutting the cache pin."""
+    from outage_data_scraper_spark.session import codegen_cache_entries, get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
+        codegen_cache_entries()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
+        get_spark(app_name="odss-tests", master="local[8]")
+
+
+def test_codegen_cache_env_accepts_the_pin(monkeypatch):
+    from outage_data_scraper_spark.session import codegen_cache_entries
+
+    monkeypatch.delenv("SPARK_GRAFT_CODEGEN_CACHE", raising=False)
+    assert codegen_cache_entries() == 8192
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "4096")
+    assert codegen_cache_entries() == 4096
