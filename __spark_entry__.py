@@ -24,6 +24,7 @@ from outage_data_scraper_spark.operators import (
     dedup,
     multimodal,
     pii,
+    shape,
     similarity,
 )
 from outage_data_scraper_spark.operators.sessionize import ganz_events, sessionize_sql
@@ -618,13 +619,13 @@ def q51_clean_corpus_pipeline(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     # spread BEFORE tokenizing and pin the gopher filter above the
-    # exchange (dedup.pin_filter) — a plain filter pushes below the
+    # exchange (shape.pin_filter) — a plain filter pushes below the
     # repartition and runs the whole rule cascade serially in the
     # one-split scan task (r8)
-    toked = dedup._spread(docs.select("doc_id", "text")).withColumn(
+    toked = shape.spread(docs.select("doc_id", "text")).withColumn(
         "toks", textkit.tokens(F.col("text"))
     )
-    kept = dedup.pin_filter(
+    kept = shape.pin_filter(
         toked, textkit.gopher_keep(F.col("text"), F.col("toks"))
     ).select("doc_id", "text")
     cleaned = dedup.span_dedup(kept, span_tokens=4, df_min=5).select(
@@ -1293,7 +1294,7 @@ def q86_fingerprint_overlap(spark, sf_dir):
     pairs of documents sharing >= 2 selected fingerprints, boilerplate
     fps (document frequency > 50) dropped first so no fp bucket can
     fan out more than 50^2 pairs (the skew guard a 100 TB corpus
-    needs). One equi-join on fp is the only wide op."""
+    needs). The pairs come from shape.pair_mine keyed on fp, no join."""
     from outage_data_scraper_spark.operators.fingerprint import (
         fingerprint_overlap,
     )
@@ -1401,14 +1402,14 @@ def q90_clean_pipeline_exactsubstr(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     # spread + pinned gopher filter (see q51): the rule cascade must not
     # serialize below the repartition into the one-split scan task (r8)
-    toked = dedup._spread(docs.select("doc_id", "text")).withColumn(
+    toked = shape.spread(docs.select("doc_id", "text")).withColumn(
         "toks", textkit.tokens(F.col("text"))
     )
-    kept = dedup.pin_filter(
+    kept = shape.pin_filter(
         toked, textkit.gopher_keep(F.col("text"), F.col("toks"))
     ).select("doc_id", "text")
     # spread=False: kept is already distributed by the pinned gopher
-    # stage's exchange — the operator's own _spread would re-probe the
+    # stage's exchange — the operator's own spread would re-probe the
     # underlying one-split file and pay a redundant round-robin
     # exchange (r8; core A/B 1.65 -> 1.17 s)
     cleaned = dedup.remove_duplicated_spans(
@@ -2127,11 +2128,11 @@ def q114_host_mirror_detection(spark, sf_dir):
     40 hosts where adjacent pairs (m2k, m2k+1) mirror each other except
     host-specific pages ((r + doc_id) % 5 == 0 stays 'own'), plus a
     'common' boilerplate signature on EVERY host: df > max_df drops it
-    from the pair join (the q86 skew law — no boilerplate hash fans
+    from the pairs (the q86 skew law — no boilerplate hash fans
     out), but it still counts in each host's denominator set.
     Containment in integer basis points of the smaller set — no float.
-    One distinct collapse + one df-capped sig equi-join; host sizes
-    join back host-cardinality-sized."""
+    One distinct collapse, then shape.pair_mine on sig with each host's
+    set size riding along (no join)."""
     from outage_data_scraper_spark.frontier.mirrors import detect_mirrors
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")

@@ -9,17 +9,13 @@ one. The reference crawls a fixed seed list and never needs this; it is
 north-rule frontier hygiene, the host-granularity sibling of the
 doc-level fingerprint overlap matcher (operators/fingerprint.py).
 
-Scale shape (10^8 hosts, 10^10 pages):
-- the page table first collapses to DISTINCT (host, sig) — one
-  map-side-combined shuffle; everything downstream is signature-set
-  sized, never page sized.
-- signatures on more than ``max_df`` hosts are dropped BEFORE the
-  self-join (site chrome, shared boilerplate, empty-page hashes): the
-  same cutoff that removes non-evidence also CAPS the join fan-out at
-  max_df² pairs per signature — no boilerplate hash can cartesian the
-  host space (the q86 skew law).
-- the signature equi-join is the only wide op; per-host set sizes are a
-  host-cardinality relation joined back (broadcastable at scale).
+Scale shape (10^8 hosts, 10^10 pages): the page table first collapses
+to DISTINCT (host, sig), so everything downstream is signature-set
+sized, never page sized; then ``operators.shape.pair_mine`` on sig,
+with each host's full set size riding along on its rows (no sizes
+table joined back). Signatures on more than ``max_df`` hosts (site
+chrome, shared boilerplate, empty-page hashes) are non-evidence and
+would fan out max_df² pairs each — the one cut drops both.
 
 Containment is reported in integer BASIS POINTS of the smaller host's
 set — (10000·shared) DIV min(n_a, n_b) — so the value is bit-exact
@@ -28,8 +24,10 @@ cross-engine (no float division; DIV ≡ // on the non-negative domain).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.shape import pair_mine
 
 
 def detect_mirrors(
@@ -53,49 +51,19 @@ def detect_mirrors(
     d = pages.select(
         F.col(host_col).alias("host"), F.col(sig_col).alias("sig")
     ).distinct()
-    sizes = d.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sigs")
-    )
-    # d is distinct, so count(*) per sig IS the distinct-host df.
-    # r8 (the q19/q86 pair-mining shape): df as a window count on ONE
-    # sig-keyed exchange, the ≤max_df cap filtered BEFORE collect_list
-    # materializes anything (lists stay bounded), pairs exploded from
-    # the bounded lists on the same partitioning — replaces the
-    # df-table join + sig self-join, which re-shuffled the signature
-    # relation twice more. Singleton sigs (df < 2) can't pair and drop
-    # with the same filter.
-    from pyspark.sql import Window
-
-    kept = d.withColumn(
-        "__df", F.count(F.lit(1)).over(Window.partitionBy("sig"))
-    ).filter((F.col("__df") >= 2) & (F.col("__df") <= max_df))
-    grouped = kept.groupBy("sig").agg(F.collect_list("host").alias("ms"))
-    pairs = (
-        grouped.select(F.explode("ms").alias("host_a"), F.col("ms"))
-        .select("host_a", F.explode("ms").alias("host_b"))
-        .filter(F.col("host_a") < F.col("host_b"))
-    )
-    shared = (
-        pairs.groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    # d is distinct, so a host's row count is its full set size, taken
+    # before pair_mine's df cut
+    sized = d.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("host")))
     return (
-        shared.join(
-            sizes.select(F.col("host").alias("host_a"), F.col("n_sigs").alias("n_a")),
-            "host_a",
-        )
-        .join(
-            sizes.select(F.col("host").alias("host_b"), F.col("n_sigs").alias("n_b")),
-            "host_b",
-        )
+        pair_mine(sized, "sig", "host", max_df, size="n")
+        .filter(F.col("shared") >= min_shared)
         .select(
-            "host_a",
-            "host_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            F.expr("(10000 * n_shared) DIV least(n_a, n_b)")
+            F.col("a").alias("host_a"),
+            F.col("b").alias("host_b"),
+            F.col("shared").alias("n_shared"),
+            F.col("n_a"),
+            F.col("n_b"),
+            F.expr("(10000 * shared) DIV least(n_a, n_b)")
             .cast("long")
             .alias("containment_bp"),
         )

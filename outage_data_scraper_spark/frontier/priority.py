@@ -316,15 +316,6 @@ def _build_registry_map_sql() -> str:
 _REGISTRY_MAP_SQL = _build_registry_map_sql()
 
 
-def with_family(df: DataFrame) -> DataFrame:
-    """Attach the site-family dispatch column (SURVEY.md O3: the
-    reference's factory-class chain, re-expressed as a dispatch
-    dimension — here a constant-folded map literal, the degenerate
-    broadcast of a dim small enough to inline into the plan)."""
-    key = F.concat_ws(":", F.col("state"), F.col("layout"))
-    return df.withColumn("family", F.try_element_at(_registry_map_expr(), key))
-
-
 def expand_endpoints(frontier: DataFrame) -> DataFrame:
     """Seed fan-out (O29): families whose one seed fetches several
     endpoints (ga1, tx1, tx4, ga11, il7 — e.g. ga_scraper.py:256–266,
@@ -384,34 +375,3 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
         family.alias("family"),
     )
     return expand_endpoints(base)
-
-
-def merge_children(
-    frontier: DataFrame, children: DataFrame, wave: int
-) -> DataFrame:
-    """Union newly-discovered child URLs into the frontier (O6 two-hop
-    discovery). ``children`` must carry (url, host, event_seq, seed_seq,
-    depth, child_seq, state, layout, emc); dedup against the current
-    frontier is the caller's job (seen-set filter runs before this)."""
-    priority = (
-        F.coalesce(F.col("priority"), F.lit(0.0))
-        if "priority" in children.columns
-        else F.lit(0.0)
-    )
-    lifted = children.select(
-        "url",
-        "host",
-        F.lit(0).alias("salted_part"),
-        priority.alias("priority"),
-        "depth",
-        "event_seq",
-        "seed_seq",
-        "child_seq",
-        "state",
-        "layout",
-        "emc",
-        "family",
-        F.lit("pending").alias("status"),
-        F.lit(wave).alias("wave"),
-    )
-    return frontier.unionByName(lifted)

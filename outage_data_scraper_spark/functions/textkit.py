@@ -31,10 +31,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text).cast("long")
-
-
 def punct_count(text: Column) -> Column:
     return (F.length(text) - F.length(F.regexp_replace(text, PUNCT_CLASS, ""))).cast(
         "long"
@@ -156,11 +152,6 @@ def word_shingles(text: Column, k: int = 5) -> Column:
         suffix = F.slice(toks, j + 1, F.size(toks))
         out = F.zip_with(out, suffix, lambda a, b: F.concat(a, F.lit(" "), b))
     return F.filter(out, lambda x: x.isNotNull())
-
-
-def shingle_hashes(text: Column, k: int = 5) -> Column:
-    """md5 of each shingle (string hashes match DuckDB's md5)."""
-    return F.transform(word_shingles(text, k), F.md5)
 
 
 def shingle_hash64(text: Column, k: int = 5) -> Column:

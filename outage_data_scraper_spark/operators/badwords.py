@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textkit
+from .shape import spread
 
 
 def badwords_filter(
@@ -49,11 +50,9 @@ def badwords_filter(
         if not toks:
             raise ValueError(f"empty blocklist phrase: {p!r}")
         by_len.setdefault(len(toks), []).append(" ".join(toks))
-    from .dedup import _spread
-
-    # _spread: the n-gram scan is O(tokens × max phrase length) per doc
+    # spread: the n-gram scan is O(tokens × max phrase length) per doc
     # and would otherwise serialize into a one-split scan task (r8)
-    base = _spread(docs).select(
+    base = spread(docs).select(
         F.col(id_col), textkit.tokens(textkit.normalized(F.col(text_col))).alias("__t")
     )
     hits = None

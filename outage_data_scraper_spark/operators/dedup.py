@@ -21,86 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textkit
-
-
-_BYTE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-string conf ('134217728', '134217728b',
-    '128m', '1g', uppercase variants); fall back to the documented
-    default rather than failing the operator on an exotic format."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    try:
-        if raw.endswith("b"):
-            raw = raw[:-1]
-        if raw and raw[-1] in _BYTE_SUFFIX:
-            return int(float(raw[:-1]) * _BYTE_SUFFIX[raw[-1]])
-        return int(raw)
-    except ValueError:
-        return default
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a narrow input up to the cluster's parallelism before a
-    CPU-heavy projection. Small parquet inputs arrive as one or two file
-    splits (maxPartitionBytes ≫ file size), which would serialize the
-    shingle/hash projections; at real scale the scan already yields more
-    splits than cores and this is a no-op.
-
-    Split count is ESTIMATED from the scan's input files using Spark's own
-    packing formula (FilePartition.maxSplitBytes) — ``df.rdd`` would build
-    the whole RDD conversion lineage just to probe parallelism. Non-file
-    inputs (createDataFrame, post-shuffle plans) fall back to the RDD
-    probe; anything un-stat-able skips the repartition (a wide scan never
-    needs it)."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = None
-    if not files:
-        if df.rdd.getNumPartitions() < target:
-            return df.repartition(target)
-        return df
-    import os
-
-    sizes = []
-    for f in files:
-        if f.startswith("file:"):
-            path = f[len("file:") :]
-        elif "://" not in f:
-            path = f
-        else:
-            return df  # remote store: scan splitting already ≈ target at scale
-        try:
-            sizes.append(os.stat(path).st_size)
-        except OSError:
-            return df
-    max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 134217728)
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4194304)
-    padded = sum(sizes) + open_cost * len(sizes)
-    max_split = min(max_part, max(open_cost, padded // max(target, 1)))
-    est_splits = max(1, -(-padded // max(max_split, 1)))
-    if est_splits < target:
-        return df.repartition(target)
-    return df
-
-
-def pin_filter(df: DataFrame, pred) -> DataFrame:
-    """Filter by an EXPENSIVE deterministic predicate without letting
-    Catalyst push it below a spreading repartition (the CLAUDE.md
-    one-split serialization pitfall: Filter pushes through
-    RepartitionByExpression, so `_spread(df).filter(pred)` evaluates
-    pred serially inside the unsplit scan task). The predicate is
-    evaluated inside a one-element explode and the filter references
-    the generator's output — Generate is never pushed below an
-    exchange and a filter on generator output cannot cross it. One
-    Generate row per input row is noise next to the predicate itself
-    (r8; measured 1.44 s → 0.26 s for the gopher pass at sf0.1)."""
-    out = df.select("*", F.explode(F.array(pred)).alias("__keep"))
-    return out.filter(F.col("__keep")).drop("__keep")
+from . import shape
 
 
 # -- exact -------------------------------------------------------------------
@@ -178,7 +99,7 @@ def minhash_signature_stage(
     fold, so the tokenizer parallelizes. Exposed separately because
     minhash_lsh_candidates checkpoints this boundary (truncating the
     plan), and the spread-before-signature shape must stay assertable."""
-    return _spread(docs).select(
+    return shape.spread(docs).select(
         F.col(id_col),
         minhash_signature(F.col(text_col), k_shingle, num_perm, hash_fn).alias("sig"),
     )
@@ -213,7 +134,7 @@ def minhash_lsh_candidates(
     # for pair mining vs 7.8 s with the boundary; identical output).
     # Lazy (eager=False): materializes at the first action, bounded at
     # num_perm longs + one id per doc. The checkpoint truncates lineage,
-    # so the _spread/projection plan shape is asserted on the pre-
+    # so the spread/projection plan shape is asserted on the pre-
     # checkpoint stage (minhash_signature_stage) in tests/test_plans.py.
     sig = minhash_signature_stage(
         docs, id_col, text_col, k_shingle, num_perm, hash_fn
@@ -225,7 +146,7 @@ def minhash_lsh_candidates(
     # band — quadratic junk pairs at crawl scale. The guard lives INSIDE
     # the exploded array (empty array → explode drops the doc), NOT as a
     # filter() above this projection: a deterministic predicate filter
-    # gets pushed below _spread's repartition by Catalyst, re-running the
+    # gets pushed below spread's repartition by Catalyst, re-running the
     # tokenizer serially on an unsplit input — the exact trap
     # ngram_jaccard_pairs documents. sig[1] is null iff no shingles
     # existed (array_min over an empty transform).
@@ -336,7 +257,7 @@ def simhash_candidates(
     # reads both sides — without the boundary the 60/64-aggregate vote
     # expression re-inlines into every reference
     sh = (
-        _spread(docs)
+        shape.spread(docs)
         .select(
             F.col(id_col),
             simhash64(F.col(text_col), hash_fn=hash_fn).alias("sh"),
@@ -349,7 +270,7 @@ def simhash_candidates(
     # Empty-doc guard (zero tokens → zero votes → sh = 0 for EVERY empty
     # doc, one hamming-0 mega-cluster of blanks) lives INSIDE the
     # exploded array, like minhash: a filter() here would be pushed below
-    # _spread's repartition, serializing the tokenizer on 1-split inputs.
+    # spread's repartition, serializing the tokenizer on 1-split inputs.
     chunk_arr = F.array(
         *[
             F.struct(
@@ -403,19 +324,12 @@ def ngram_jaccard_pairs(
     1. Project each doc to (id, n=|shingle set|, exploded shingle hash):
        xxhash64 shingles JVM-side; n rides along on every exploded row so
        no separate sizes table (and no join back) is ever needed.
-    2. Shuffle once on the shingle hash; a window count-per-shingle
-       computes document frequency WITHOUT materializing per-shingle
-       lists, then drops singletons (can't pair) and hot shingles with
-       df > df_max. A shingle shared by >df_max docs is boilerplate — it
-       carries no near-dup signal but would generate df² pair rows (the
-       quadratic blowup at web scale); the cap is mirrored in the DuckDB
-       oracle so q19 stays value-exact. collect_list after the window
-       reuses the same hash partitioning (no new exchange) and every list
-       is bounded by df_max.
-    3. Explode co-occurrence pairs (≤ df_max² per shingle, distributed)
-       and shuffle once on (id_a, id_b): count = |intersection|, set
-       sizes come along via any_value. Jaccard + threshold filter close
-       the plan.
+    2. ``shape.pair_mine`` on the shingle hash: one shuffle on the
+       shingle, df cap, co-occurrence pairs, one shuffle on the pair —
+       count = |intersection|, set sizes come along. A shingle shared by
+       >df_max docs is boilerplate; the cap is mirrored in the DuckDB
+       oracle so q19 stays value-exact.
+    3. Jaccard + threshold filter close the plan.
 
     Results are identical to the md5-based DuckDB oracle because only
     shingle *identity* feeds the counts.
@@ -428,40 +342,15 @@ def ngram_jaccard_pairs(
     # the whole shingle expression serially on the unsplit input just to
     # evaluate the predicate.
     sh = (
-        _spread(docs)
+        shape.spread(docs)
         .select(F.col(id_col), arr.alias("arr"))
         .select(F.col(id_col), F.size("arr").alias("n"), F.explode("arr").alias("sh"))
-        # explicit-count repartition (exempt from AQE coalescing, the
-        # _bucketed_apply pattern): the byte-targeting coalescer would
-        # merge this small exchange into 1-2 partitions and serialize
-        # the CPU-heavy pair explosion that runs on top of it (r8;
-        # 1.79 -> 1.36 s at sf0.1). The window below reuses this
-        # partitioning, so the exchange count is unchanged.
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "sh")
     )
-    w = Window.partitionBy("sh")
-    kept = sh.withColumn("df", F.count(F.lit(1)).over(w)).filter(
-        (F.col("df") >= 2) & (F.col("df") <= df_max)
-    )
-    grouped = kept.groupBy("sh").agg(
-        F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("n").alias("n"))).alias("ms")
-    )
-    pairs = (
-        grouped.select(F.explode("ms").alias("a"), F.col("ms"))
-        .select("a", F.explode("ms").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
-    )
-    inter = pairs.groupBy(
-        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-    ).agg(
-        F.count(F.lit(1)).alias("common"),
-        F.any_value(F.col("a.n")).alias("na"),
-        F.any_value(F.col("b.n")).alias("nb"),
-    )
+    inter = shape.pair_mine(sh, "sh", id_col, df_max, size="n")
     return inter.select(
-        "id_a",
-        "id_b",
-        (F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))).alias("jaccard"),
+        F.col("a").alias("id_a"),
+        F.col("b").alias("id_b"),
+        (F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))).alias("jaccard"),
     ).filter(F.col("jaccard") >= min_jaccard)
 
 
@@ -564,7 +453,7 @@ def span_dedup(
     # tokenization HOISTED to a materialized column: expressions inside
     # higher-order-function lambdas re-evaluate PER ELEMENT (CLAUDE.md),
     # so referencing the raw split-expression from the span lambda would
-    # re-tokenize the whole document once per span. No _spread here: the
+    # re-tokenize the whole document once per span. No spread here: the
     # 4-token chunk projection is cheap enough that the round-robin
     # exchange costs more than the serialized map work it saves
     # (measured 0.50 vs 0.78 s at sf0.1, r8) — callers whose input is
@@ -672,7 +561,7 @@ def chunk_dedup_keep_first(
     from ..functions import textkit
 
     # tokenization hoisted out of the HOF lambda (per-element
-    # re-evaluation trap, CLAUDE.md); no _spread — the 4-token chunk
+    # re-evaluation trap); no spread — the 4-token chunk
     # projection is cheaper than the round-robin exchange (r8, same
     # trade as span_dedup)
     base = docs.select(
@@ -826,9 +715,9 @@ def benchmark_overlap(
     """
     def shingled(df: DataFrame) -> DataFrame:
         # identity-only probe: hash-chain shingles, never window strings;
-        # _spread parallelizes the k-fold chain past a one-split scan
+        # spread parallelizes the k-fold chain past a one-split scan
         # (r8 — A/B 1.19 s vs 0.48 s at sf0.1 for the k=5 chain)
-        return _spread(df).select(
+        return shape.spread(df).select(
             F.col(id_col).alias("doc_id"),
             F.explode(textkit.shingle_hash64(F.col(text_col), k)).alias("s"),
         )
@@ -875,7 +764,7 @@ def _maximal_dup_spans(
     count window, which would pin every occurrence of the hot key in
     one task with no runtime remedy.
     """
-    flat = (_spread(docs) if spread else docs).select(
+    flat = (shape.spread(docs) if spread else docs).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(textkit.shingle_hash64(F.col(text_col), w)).alias("pos", "wh"),
     ).repartition("wh")

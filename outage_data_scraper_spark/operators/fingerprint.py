@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .shape import pair_mine, spread
+
 #: pos is packed into the low 24 bits of the selection key
 _POS_BITS = 24
 _POS_MASK = (1 << _POS_BITS) - 1
@@ -90,17 +92,14 @@ def winnow_fingerprints(
     """Per-document winnowing fingerprints as (id_col, pos, fp) rows.
 
     One Arrow-batched mapInPandas over (id, text) — the selection is
-    per-document, so the only exchange is `_spread`'s small-input
+    per-document, so the only exchange is `spread`'s small-input
     repartition (a no-op on any scan already yielding ≥cores splits,
     i.e. at scale; without it the whole Python winnow pass serializes
     into a one-split scan task — r8, 0.80 s → 0.46 s at sf0.1).
-    Downstream cross-doc matching equi-joins on fp, which is the only
-    wide op in the whole fingerprinting story and carries ~2/(w+1) of
-    the shingle count.
+    Downstream cross-doc matching (fingerprint_overlap) mines pairs
+    keyed on fp, which carries ~2/(w+1) of the shingle count.
     """
-    from .dedup import _spread
-
-    src = _spread(docs.select(F.col(id_col), F.col(text_col).alias("__text")))
+    src = spread(docs.select(F.col(id_col), F.col(text_col).alias("__text")))
     # Output id keeps the INPUT id column's type (a string doc_id must
     # not silently coerce to long at the Arrow boundary).
     id_type = docs.schema[id_col].dataType
@@ -139,40 +138,22 @@ def fingerprint_overlap(
     for (MOSS's match step). Returns (id_a, id_b, n_shared), id_a <
     id_b.
 
-    Scale shape (r8 — the q19 pair-mining shape): after the map-only
-    fingerprint pass, ONE exchange on fp computes the document
-    frequency as a window count, drops singletons (can't pair) and
-    fingerprints above max_df (a boilerplate shingle shared by 10^6
-    docs would otherwise mint df^2 pair rows in one bucket — the
-    standard MOSS common-code cutoff doubles as the skew guard), THEN
-    collects the ≤max_df-bounded doc lists on the same partitioning
-    (no new exchange) and explodes co-occurrence pairs. The previous
-    df-table join + fp self-join re-shuffled the fingerprint relation
-    twice more (1.25 s → 0.66 s at sf0.1); the window-before-collect
-    order keeps the per-fp lists bounded BEFORE anything materializes
-    them, the same law q19's plan test pins.
+    Scale shape: the map-only fingerprint pass, then
+    ``shape.pair_mine`` on fp. The MOSS common-code cutoff (fps on more
+    than max_df docs) doubles as the skew guard: a boilerplate shingle
+    shared by 10^6 docs would otherwise mint df² pair rows in one task.
     """
     fps = (
         winnow_fingerprints(docs, k, w, id_col, text_col)
         .select(F.col(id_col), "fp")
         .distinct()
     )
-    from pyspark.sql import Window
-
-    kept = fps.withColumn(
-        "__df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-    ).filter((F.col("__df") >= 2) & (F.col("__df") <= max_df))
-    grouped = kept.groupBy("fp").agg(F.collect_list(F.col(id_col)).alias("ms"))
-    pairs = (
-        grouped.select(F.explode("ms").alias("__a"), F.col("ms"))
-        .select("__a", F.explode("ms").alias("__b"))
-        .filter(F.col("__a") < F.col("__b"))
-    )
     return (
-        pairs.groupBy(
-            F.col("__a").alias("id_a"),
-            F.col("__b").alias("id_b"),
+        pair_mine(fps, "fp", id_col, max_df)
+        .select(
+            F.col("a").alias("id_a"),
+            F.col("b").alias("id_b"),
+            F.col("shared").alias("n_shared"),
         )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textkit
+from .shape import spread
 
 
 def bigram_lm_scores(
@@ -39,10 +40,8 @@ def bigram_lm_scores(
     """Per-doc (n_bigrams, avg_nll) under the corpus-trained add-one
     bigram model: P(w2|w1) = (c(w1 w2)+1) / (c(w1)+V). Docs with fewer
     than two tokens have no bigrams and emit no row."""
-    from .dedup import _spread
-
     text = F.col(text_col)
-    docs = _spread(docs)  # parallelize the explodes past a 1-split scan (r8)
+    docs = spread(docs)  # parallelize the explodes past a 1-split scan (r8)
     uni_stream = docs.select(
         F.explode(F.split(textkit.normalized(text), " ")).alias("t")
     )
@@ -271,9 +270,7 @@ def score_bigram_lm_table(
     vocab = int(
         spark.read.parquet(os.path.join(path, "meta")).collect()[0]["vocab"]
     )
-    from .dedup import _spread
-
-    bgs = _spread(docs).select(
+    bgs = spread(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode(textkit.word_shingles(F.col(text_col), 2)).alias("bg"),
     )

@@ -82,19 +82,6 @@ def sessionize_sql(
     )
 
 
-def session_properties(sessions: DataFrame) -> DataFrame:
-    """Scalar aggregate report per group (O28, step2_property.py:60–94):
-    outage frequency, avg duration, avg peak customers."""
-    return sessions.groupBy(*GROUP_KEYS).agg(
-        F.count(F.lit(1)).alias("outage_frequency"),
-        F.avg("duration_min").alias("avg_duration_min"),
-        F.avg("peak_value").alias("avg_peak_customers_out"),
-        F.sum(
-            F.col("tw_mean_value") * F.col("duration_min")
-        ).alias("total_customer_minutes"),
-    )
-
-
 _SM_SCHEMA = (
     "UtilityName string, StateName string, CountyName string, CityName string, "
     "session_id int, session_start_ts timestamp, session_end_ts timestamp, "

@@ -18,10 +18,6 @@ def formatted_plan(df: DataFrame) -> str:
     return qe.explainString(mode)
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
     """Assert a predicate was pushed into the scan (reads `PushedFilters`)."""
     plan = formatted_plan(df)

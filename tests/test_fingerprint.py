@@ -169,7 +169,7 @@ def test_overlap_no_cartesian(spark):
 
 def test_zero_wide_shuffle_plan(spark):
     """The fingerprint pass is a pure per-doc projection: the only
-    Exchange ever allowed is _spread's small-input RoundRobin
+    Exchange ever allowed is shape.spread's small-input RoundRobin
     repartition (a no-op on scans already yielding >= cores splits —
     it exists so the Python winnow pass doesn't serialize into a
     one-split scan task); no hash/range exchange may appear."""

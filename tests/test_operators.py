@@ -1254,7 +1254,7 @@ def test_lm_table_parity_with_dict_path(spark, tmp_path):
 def test_lm_table_plan_broadcasts_model(spark, tmp_path):
     """Scoring under the table model: both model joins broadcast and the
     only HASH exchange is the per-doc (doc_id, micro_nll) regroup
-    (_spread's small-input RoundRobin repartition — a no-op on scans
+    (shape.spread's small-input RoundRobin repartition — a no-op on scans
     already yielding >= cores splits — is the one other exchange
     allowed, r8)."""
     from outage_data_scraper_spark.operators.lm import (

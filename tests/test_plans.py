@@ -5,6 +5,8 @@ must demonstrably push filters/columns into the parquet scan and broadcast
 dimensions (SURVEY.md §4.2) — checked here against the real plans.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,6 +85,96 @@ def test_ngram_jaccard_plan_shape(spark):
     # only doc_id + text leave the scan
     assert_column_pruned(q, "lang")
     assert_column_pruned(q, "source")
+
+
+def _assert_df_window_below_collect(plan: str, what: str) -> None:
+    """pair_mine's contract (the q19 pin above, for its other callers):
+    the df-count Window sits below the collect_list aggregate, so the
+    max_df cap bounds every list before it materializes."""
+    agg = plan.find("collect_list(")
+    w = plan.find("Window [count(1)", agg)
+    assert agg != -1, f"{what}: no collect_list aggregate"
+    assert w != -1, f"{what}: collect_list runs before the DF-cap window filter"
+
+
+def test_fingerprint_overlap_plan_shape(spark):
+    """q86 runs pair_mine: df window below collect_list, and no more
+    exchanges than before the kernel (spread, distinct, fp, pair key and
+    the final sort)."""
+    import __spark_entry__ as e
+
+    q = e.q86_fingerprint_overlap(spark, SF)
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    _assert_df_window_below_collect(plan, "q86")
+    n = count_exchanges(q)
+    assert n <= 5, f"fingerprint overlap plans {n} exchanges"
+
+
+def test_mirror_detection_plan_shape(spark):
+    """q114 runs pair_mine with the host set size riding along on each
+    row: df window below collect_list and NO join (the sizes table and
+    its two joins back are gone; 8 → 5 exchanges)."""
+    import __spark_entry__ as e
+
+    q = e.q114_host_mirror_detection(spark, SF)
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    _assert_df_window_below_collect(plan, "q114")
+    assert "Join" not in plan, f"mirror detection plans a join:\n{plan}"
+    n = count_exchanges(q)
+    assert n <= 5, f"mirror detection plans {n} exchanges"
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, operator text) per line of a physical plan's tree string."""
+    nodes = []
+    for line in plan.splitlines():
+        m = re.match(r"[ :]*?([+:]- )", line)
+        nodes.append((m.start(1) // 3 + 1, line[m.end() :]) if m else (0, line))
+    return nodes
+
+
+def _subtree(nodes: list[tuple[int, str]], i: int) -> list[str]:
+    depth, out = nodes[i][0], []
+    for d, text in nodes[i + 1 :]:
+        if d <= depth:
+            break
+        out.append(text)
+    return out
+
+
+@pytest.mark.parametrize(
+    "query", ["q51_clean_corpus_pipeline", "q90_clean_pipeline_exactsubstr"]
+)
+def test_gopher_filter_pinned_above_spread(spark, query):
+    """shape.pin_filter's contract: every gopher
+    `Generate explode(array(pred))` and its `__keep` Filter sit above the
+    RoundRobin exchange of shape.spread, and the predicate is evaluated
+    in no node below that exchange. Catalyst pushes a plain filter below
+    the repartition, which runs the rule cascade serially in the
+    one-split scan task."""
+    import __spark_entry__ as e
+
+    q = getattr(e, query)(spark, SF)
+    nodes = _plan_nodes(q._jdf.queryExecution().executedPlan().toString())
+    gens = [i for i, (_, t) in enumerate(nodes) if t.startswith("Generate explode(array(")]
+    assert gens, f"{query}: no pinned gopher Generate"
+    for i in gens:
+        below = _subtree(nodes, i)
+        assert any(t.startswith("Exchange RoundRobinPartitioning") for t in below), (
+            f"{query}: gopher Generate not above the spread exchange"
+        )
+        parent = next(t for d, t in reversed(nodes[:i]) if d == nodes[i][0] - 1)
+        assert parent.startswith("Filter") and "__keep" in parent, parent
+    rrs = [
+        i for i, (_, t) in enumerate(nodes)
+        if t.startswith("Exchange RoundRobinPartitioning")
+    ]
+    assert rrs
+    for i in rrs:
+        for t in _subtree(nodes, i):
+            assert "__keep" not in t and "size(" not in t, (
+                f"{query}: gopher predicate evaluated below the spread exchange: {t}"
+            )
 
 
 def test_embedding_near_dup_lsh_no_cartesian(spark):
@@ -183,7 +275,7 @@ def test_crawl_wave_two_shuffle_budget(spark, tmp_path):
 
 def test_minhash_lsh_plan_spreads_before_signature(spark):
     """ADVICE r2: the empty-doc guard must not be a filter Catalyst can
-    push below _spread's repartition (which would evaluate the tokenizer
+    push below shape.spread's repartition (which would evaluate the tokenizer
     serially on a 1-split input). The guard now lives inside the exploded
     band array, so the plan has NO tokenizer predicate below the
     round-robin exchange and the heavy Generate sits above it."""
@@ -484,7 +576,7 @@ def test_allocate_quotas_windows_only_group_sized(spark):
 
 
 def test_mirror_detection_no_cartesian(spark):
-    """q114: the host-pair evidence must come from the sig equi-join —
+    """q114: the host-pair evidence must come from sig-keyed pair mining —
     never a cartesian/nested-loop over the host space."""
     from outage_data_scraper_spark.frontier.mirrors import detect_mirrors
     from outage_data_scraper_spark.plans.explain import formatted_plan
