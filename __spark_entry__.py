@@ -1188,12 +1188,12 @@ def q81_cms_heavy_hitters(spark, sf_dir):
         F.explode(textkit.tokens(textkit.normalized(F.col("text")))).alias("term")
     )
     # one corpus aggregation feeds everything (r8): the sketch builds
-    # from the vocab-sized exact-count table via cms_table_weighted
-    # (identical cells — the sum distributes), so the corpus explodes
+    # from the vocab-sized exact-count table (cms_table with cnt_col —
+    # identical cells, the sum distributes), so the corpus explodes
     # once and the d md5 bucket hashes run per DISTINCT term, not per
     # token occurrence
     cand = toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    table = sketch.cms_table_weighted(cand, "term", "exact_cnt")
+    table = sketch.cms_table(cand, "term", cnt_col="exact_cnt")
     est = sketch.cms_estimate(table, cand.select("term"), "term")
     return (
         est.join(cand, "term")

@@ -107,7 +107,8 @@ def cms_bucket(value: Column, row: int, w: int = CMS_W) -> Column:
 
 
 def cms_table(
-    df: DataFrame, value_col: str, d: int = CMS_D, w: int = CMS_W
+    df: DataFrame, key_col: str, d: int = CMS_D, w: int = CMS_W,
+    cnt_col: str | None = None,
 ) -> DataFrame:
     """Mergeable Count-Min table: (row, bucket, cnt) — the d×w counter
     grid as rows. ONE pass over the data (posexplode of the d bucket
@@ -115,32 +116,19 @@ def cms_table(
     ≤ d·w rows per task regardless of input size. Merge sketches from
     independent shards/days by unionByName + groupBy(row, bucket)
     sum — associative, the same property as hll_registers. Cormode &
-    Muthukrishnan 2005 semantics."""
-    buckets = F.array(*[cms_bucket(F.col(value_col), i, w) for i in range(d)])
-    return (
-        df.select(F.posexplode(buckets).alias("row", "bucket"))
-        .groupBy("row", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    Muthukrishnan 2005 semantics.
 
-
-def cms_table_weighted(
-    counts: DataFrame, key_col: str, cnt_col: str, d: int = CMS_D, w: int = CMS_W
-) -> DataFrame:
-    """cms_table over a PRE-AGGREGATED (key, count) relation: each cell
-    is Σ count of the keys hashing into it — the IDENTICAL table
-    cms_table builds from the raw stream (the sum distributes over
-    occurrences), but the d md5 bucket hashes are computed once per
-    DISTINCT key instead of once per occurrence (r8: q81 was hashing
-    every corpus token d times AND re-exploding the corpus for the
-    exact counts; with this, one corpus aggregation feeds sketch,
-    probes and exact counts). cms_table stays the streaming shape —
-    a raw stream can't be pre-aggregated across micro-batches."""
+    A cell counts the rows hashing into it, or with ``cnt_col`` the sum
+    of that column over them: over a PRE-AGGREGATED (key, count)
+    relation this is the IDENTICAL table the raw stream builds (the sum
+    distributes over occurrences), with the d md5 hashes computed once
+    per DISTINCT key instead of per occurrence (q81 feeds sketch,
+    probes and exact counts from one corpus aggregation). A raw stream
+    can't be pre-aggregated across micro-batches, so q111 counts rows."""
     buckets = F.array(*[cms_bucket(F.col(key_col), i, w) for i in range(d)])
+    weight = F.lit(1) if cnt_col is None else F.col(cnt_col)
     return (
-        counts.select(
-            F.col(cnt_col).alias("__c"), F.posexplode(buckets).alias("row", "bucket")
-        )
+        df.select(weight.alias("__c"), F.posexplode(buckets).alias("row", "bucket"))
         .groupBy("row", "bucket")
         .agg(F.sum("__c").cast("long").alias("cnt"))
     )

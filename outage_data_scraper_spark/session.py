@@ -9,11 +9,13 @@ are what make it scale, not these knobs.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 MIN_CODEGEN_CACHE = 4096
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 
 def codegen_cache_entries() -> int:
@@ -46,6 +48,7 @@ def get_spark(
     - No speculative execution: fetch tasks are side-effecting
       (SURVEY.md §7.3 — duplicate fetches would corrupt fetch_log).
     """
+    codegen_cache = str(codegen_cache_entries())
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (
@@ -73,7 +76,7 @@ def get_spark(
         # it bounds compiled-class count, never data, so results and
         # scale behavior are unchanged (a production driver running a
         # query mix wants the same headroom).
-        .config("spark.sql.codegen.cache.maxEntries", str(codegen_cache_entries()))
+        .config(CODEGEN_CACHE_CONF, codegen_cache)
         # partition columns stay strings — snapshot unions must not see
         # a layout='8' directory flip to int via type inference
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
@@ -83,4 +86,16 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # getOrCreate() hands back a running session unchanged for static
+    # confs, so a different codegen-cache request is silently ignored
+    requested = (extra_conf or {}).get(CODEGEN_CACHE_CONF, codegen_cache)
+    actual = spark.conf.get(CODEGEN_CACHE_CONF)
+    if actual != requested:
+        warnings.warn(
+            f"{CODEGEN_CACHE_CONF}={requested} requested but the reused "
+            f"SparkSession runs with {actual}: static confs apply only "
+            "when the session is first built",
+            stacklevel=2,
+        )
+    return spark

@@ -6,8 +6,8 @@ snapshot dirs; without maintenance every pending() probe unions the whole
 append history. This soak simulates a 10⁶-URL crawl across N_WAVES waves
 (each wave appends one fetch_log snapshot marking ~10⁶/N_WAVES URLs done —
 the append pattern of run_wave, without paying fetch/parse time) and times
-the per-wave pending probe (`pending().limit(1).count()`, exactly what
-run() executes) at checkpoints, in two regimes:
+the pending anti-join each wave's pop pays (run() stops on an empty pop, no
+separate probe), as `pending().limit(1).count()` at checkpoints, in two regimes:
 
   compacted:  Crawler.compact() every COMPACT_EVERY waves
   append-only: never compacted (the degenerate baseline)

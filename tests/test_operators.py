@@ -2239,16 +2239,16 @@ def test_cms_overestimate_and_merge_associativity(spark):
 
 
 def test_cms_table_weighted_equals_stream_table(spark):
-    """cms_table_weighted over the pre-aggregated (key, count) relation
-    must equal cms_table over the raw stream CELL-FOR-CELL (the r8 q81
-    restructure rests on the sum distributing over occurrences)."""
+    """cms_table(cnt_col=...) over the pre-aggregated (key, count)
+    relation must equal cms_table over the raw stream CELL-FOR-CELL (the
+    r8 q81 restructure rests on the sum distributing over occurrences)."""
     from outage_data_scraper_spark.operators import sketch
 
     rows = [(i, f"k{i % 97}") for i in range(3000)]
     df = spark.createDataFrame(rows, "i long, term string").repartition(8)
     stream = sketch.cms_table(df, "term", d=4, w=64)
     counts = df.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    weighted = sketch.cms_table_weighted(counts, "term", "c", d=4, w=64)
+    weighted = sketch.cms_table(counts, "term", d=4, w=64, cnt_col="c")
     a = {(r.row, r.bucket): r.cnt for r in stream.collect()}
     b = {(r.row, r.bucket): r.cnt for r in weighted.collect()}
     assert a == b

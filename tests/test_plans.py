@@ -680,3 +680,26 @@ def test_codegen_cache_env_accepts_the_pin(monkeypatch):
     assert codegen_cache_entries() == 8192
     monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "4096")
     assert codegen_cache_entries() == 4096
+
+
+def test_get_spark_warns_when_reused_session_ignores_codegen_cache(spark, monkeypatch):
+    """getOrCreate() reuses the running session, whose static codegen
+    cache size cannot change: a different request warns with both
+    values, a matching one stays silent. Re-passes the fixture's own
+    arguments so the shared session's runtime confs are untouched."""
+    import warnings
+
+    from outage_data_scraper_spark.session import get_spark
+
+    fixture_args = dict(app_name="odss-tests", master="local[8]", shuffle_partitions=8)
+    actual = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert actual != "5000"
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "5000")
+    with pytest.warns(UserWarning, match=rf"maxEntries=5000 requested .* with {actual}:"):
+        assert get_spark(**fixture_args) is spark
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == actual
+
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", actual)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert get_spark(**fixture_args) is spark
