@@ -281,7 +281,7 @@ def crawl_job(spark, n_urls: int, num_parts: int) -> float:
                       salt=num_parts, lane_cap=1)
     parsed = fused_fetch_parse(
         popped, make_fixture_fetcher, num_parts=num_parts,
-        rate_per_host=1e9, salt=16, simulated_clock=True,
+        rate_per_host=1e9, simulated_clock=True,
     )
     _noop_materialize(parsed.filter(F.col("kind").isin("record", "text")))
     return time.monotonic() - t0

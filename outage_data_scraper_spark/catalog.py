@@ -97,7 +97,8 @@ class SnapshotCatalog:
         pages by (url bucket, day), FIXTURES.md §1.1) so scans with
         partition predicates prune files.
         """
-        assert mode in ("append", "overwrite")
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
         # dict.setdefault is atomic under the GIL (defaultdict's
         # __missing__ is not), so two racing first-writers get ONE lock
         with self._locks.setdefault(name, threading.Lock()):

@@ -89,7 +89,8 @@ class Crawler:
         self.num_parts = num_parts
         self.salt = salt
         self.rate_per_host = rate_per_host
-        assert seen_mode in ("exact", "bloom")
+        if seen_mode not in ("exact", "bloom"):
+            raise ValueError(f"seen_mode must be 'exact' or 'bloom', got {seen_mode!r}")
         self.seen_mode = seen_mode
         self.simulated_clock = simulated_clock
         self.BLOOM_EXPECTED_N = bloom_expected_n
@@ -284,7 +285,6 @@ class Crawler:
             self.fetcher_factory,
             num_parts=self.num_parts,
             rate_per_host=self.rate_per_host,
-            salt=self.salt,
             simulated_clock=self.simulated_clock,
         )
 

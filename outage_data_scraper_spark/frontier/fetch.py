@@ -45,16 +45,14 @@ def fetch_wave(
     fetcher_factory: Callable[[], FetchFn],
     num_parts: int = 32,
     rate_per_host: float = 1.0,
-    salt: int = 1,
     simulated_clock: bool = True,
-    rate_overrides: dict[str, float] | None = None,
 ) -> DataFrame:
     """Fetch every popped URL; returns FETCH_RESULT_SCHEMA rows (raw html
     included — the two-stage form, for callers that persist payloads)."""
     return fetch_stage(
         popped, fetcher_factory, FETCH_RESULT_SCHEMA, lambda chunk: chunk,
-        num_parts=num_parts, rate_per_host=rate_per_host, salt=salt,
-        simulated_clock=simulated_clock, rate_overrides=rate_overrides,
+        num_parts=num_parts, rate_per_host=rate_per_host,
+        simulated_clock=simulated_clock,
     )
 
 
@@ -65,9 +63,7 @@ def fetch_stage(
     finish: Callable[[pd.DataFrame], pd.DataFrame],
     num_parts: int = 32,
     rate_per_host: float = 1.0,
-    salt: int = 1,
     simulated_clock: bool = True,
-    rate_overrides: dict[str, float] | None = None,
 ) -> DataFrame:
     """The ONE fetch ``mapInPandas`` stage: repartition by ``salted_part``
     (host co-location), fetch each partition with ``fetch_partition`` and
@@ -77,12 +73,13 @@ def fetch_stage(
     ``fetcher_factory`` is called once per partition (so connection pools /
     fixture stores initialize executor-side, not on the driver).
 
-    Optional ``popped`` columns, each nullable per row:
+    Optional ``popped`` columns, each nullable per row, are the only
+    inputs to pacing besides ``rate_per_host``:
     - ``rate_override`` (req/s): robots Crawl-delay, joined in by the
       robots gate — never a driver-side host dict, which would OOM at
-      10^8-host scale. ``rate_overrides`` (host → req/s dict) remains for
-      small/test configurations.
-    - ``n_lanes``: the host's fetch-lane count from ``pop_wave``.
+      10^8-host scale. Null means ``rate_per_host``.
+    - ``n_lanes``: the host's fetch-lane count from ``pop_wave``; each
+      lane paces at rate∕n_lanes. Null means one lane at the full rate.
     - ``robots_allow``: False marks a robots-denied URL, logged as a 451
       without a request (``robots.robots_gate(..., flag=...)``).
     """
@@ -90,9 +87,7 @@ def fetch_stage(
     part = popped.repartition(num_parts, "salted_part").select(*_IN_COLS, *opt)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pacer = HostPacer(
-            rate_per_host, salt=salt, sim=simulated_clock, rate_overrides=rate_overrides
-        )
+        pacer = HostPacer(rate_per_host, sim=simulated_clock)
         for chunk in fetch_partition(batches, fetcher_factory(), pacer):
             yield finish(chunk)
 

@@ -4,9 +4,9 @@ The reference's politeness is fixed `time.sleep(3/5/10/30)` between
 navigations plus a 10 s request timeout (reference: app/scrapers/
 ga_scraper.py:404,411,726; util.py:74). The engine replaces that with a
 token bucket per host, living inside each fetch partition. Host→partition
-affinity (urlkit.salted_part) guarantees a host's bucket state is held by
-at most ``salt`` partitions per wave; with salt=1 (the parity config) the
-budget is exact, with salt>1 each sub-partition gets rate/salt.
+affinity (urlkit.salted_part) puts a host's rows on its ``n_lanes`` lanes
+(pop_wave's per-row lane count); each lane's bucket paces at
+rate/``n_lanes``, so the host's aggregate stays within its rate.
 
 Clocks are injectable so tests run with a simulated clock (no wall sleep)
 and the bench uses a deterministic latency model instead of the network.
@@ -66,27 +66,14 @@ class TokenBucket:
 class HostPacer:
     """One token bucket per host, lazily created inside a fetch partition.
 
-    A host's rate can be overridden per-row via ``acquire(host, rate)``
-    (the fetch stage passes the robots Crawl-delay joined onto the wave
-    as a column — no driver-side host dict at 10^8-host scale) or via the
-    ``rate_overrides`` dict (small/test configurations). Per-row rate
-    wins; hosts with neither use the default rate.
+    The fetch stage passes each row's own pacing columns to ``acquire``:
+    ``rate`` is the robots Crawl-delay joined onto the wave (no
+    driver-side host dict at 10^8-host scale; None means
+    ``rate_per_host``), ``lanes`` the host's lane count from pop_wave.
     """
 
-    def __init__(
-        self,
-        rate_per_host: float,
-        salt: int = 1,
-        sim: bool = False,
-        rate_overrides: dict[str, float] | None = None,
-    ):
-        # With salted co-location up to `salt` sub-partitions may host
-        # the same domain; each lane enforces rate/lanes (per-row lane
-        # counts win; `salt` is the fallback divisor).
-        self.salt = max(salt, 1)
-        self.base_rate = rate_per_host
-        self.rate = rate_per_host / self.salt
-        self.overrides = rate_overrides or {}
+    def __init__(self, rate_per_host: float, sim: bool = False):
+        self.rate_per_host = rate_per_host
         self.sim = sim
         self.clock = SimClock() if sim else None
         self._buckets: dict[str, TokenBucket] = {}
@@ -94,19 +81,15 @@ class HostPacer:
     def acquire(
         self, host: str, rate: float | None = None, lanes: int | None = None
     ) -> float:
-        """``lanes``: the host's ACTUAL fetch-lane count (pop_wave's
-        adaptive n_lanes column). The per-lane budget divides by it; the
-        constructor ``salt`` remains the fallback divisor for callers
-        without the column (a small host with one lane is then paced at
-        the FULL configured rate, not rate∕salt)."""
+        """Take one token from ``host``'s bucket, created on first use at
+        ``rate``∕``lanes`` req/s: the host's lanes pace in parallel, so
+        each takes an equal share of the host's budget. A null ``lanes``
+        is one lane at the full rate."""
         b = self._buckets.get(host)
         if b is None:
-            div = max(int(lanes), 1) if lanes is not None else self.salt
-            if rate is None:
-                rate = self.overrides.get(host, None)
-            rate = (rate / div) if rate is not None else self.base_rate / div
+            rate = self.rate_per_host if rate is None else rate
             b = TokenBucket(
-                rate=rate,
+                rate=rate / max(lanes or 1, 1),
                 capacity=1.0,
                 clock_now=self.clock.now if self.sim else time.monotonic,
                 clock_sleep=self.clock.sleep if self.sim else time.sleep,

@@ -7,7 +7,8 @@ most ``per_host_k`` URLs from each host, ordered by the crawl-ordering law
     (priority, event_seq, seed_seq, depth, child_seq)
 
 which degenerates to the reference's exact sequential order when every
-seed has equal priority (the parity test in tests/test_crawl_parity.py).
+seed has equal priority (the parity test is
+tests/test_crawl_e2e.py::test_crawl_ordering_law_reproduces_reference).
 
 Physical shape: one shuffle (hash partition by host for the window), then
 a salted repartition for the fetch stage so hot hosts (28/285 seed URLs on
@@ -67,8 +68,11 @@ def pop_wave(
     unit (≤ 1 per domain, only when budget > domain pool). Composes
     with ``wave_budget`` (domain quotas first, global cut after).
 
-    Returns the popped rows with a ``salted_part`` fetch-partition column.
-    The caller marks them in-flight / fetched via the catalog MERGE.
+    Returns the popped rows with a ``salted_part`` fetch-partition column
+    and the host's ``n_lanes`` lane count, which the fetch stage's pacer
+    divides the host's rate by. Popping marks nothing: a URL is done once
+    the wave appends its fetch_log row, and the next wave's ``pending()``
+    anti-joins it away (Crawler.pending).
     """
     w = Window.partitionBy("host").orderBy(*[F.col(c).asc() for c in ORDER_COLS])
     wc = Window.partitionBy("host")
@@ -97,8 +101,7 @@ def pop_wave(
         {
             "n_lanes": lanes,
             "salted_part": urlkit.salted_part(
-                F.col("host"), F.col("url"), num_parts, salt,
-                rn=F.col("rn"), lanes=lanes,
+                F.col("host"), num_parts, F.col("rn"), lanes
             ),
         }
     ).drop("rn", "cnt")

@@ -106,40 +106,25 @@ def adaptive_lanes(
     ).cast("long")
 
 
-def salted_part(
-    host_col: Column,
-    url: Column,
-    num_parts: int,
-    salt: int = 4,
-    rn: Column | None = None,
-    lanes: Column | None = None,
-) -> Column:
+def salted_part(host_col: Column, num_parts: int, rn: Column, lanes: Column) -> Column:
     """Partition id that keeps one host co-located while spreading hot
-    hosts across at most ``salt`` lanes (SURVEY.md §4.3: 28/285 seed URLs
+    hosts across ``lanes`` fetch lanes (SURVEY.md §4.3: 28/285 seed URLs
     share one host — naive repartition(host) straggles at scale). A
     host's lanes map to CONSECUTIVE partitions starting at its host hash,
-    so its token-bucket state stays on ≤ salt executors while a hot
+    so its token-bucket state stays on ≤ lanes executors while a hot
     host's parse work fans out.
 
-    When the caller passes ``rn`` (the per-host row_number it already
-    computed for the top-k pop) and ``lanes`` (adaptive_lanes over the
-    count of the same window — free, same partitioning), lanes are
-    ADAPTIVE and EXACT: lane = (rn−1) mod lanes gives every lane the same
-    row count ±1. Small hosts stay on ONE partition (and the pacer,
-    receiving the same lane count, paces them at the FULL configured
-    rate); only hosts larger than lane_cap split, and a web-scale hot
-    host spreads evenly across up to ``salt`` partitions.
+    ``rn`` is the per-host row_number the caller already computed for
+    the top-k pop and ``lanes`` is adaptive_lanes over the count of the
+    same window (free, same partitioning), so lane = (rn−1) mod lanes
+    gives every lane the same row count ±1. Small hosts stay on ONE
+    partition (and the pacer, receiving the same lane count as
+    ``n_lanes``, paces them at the FULL configured rate); only hosts
+    larger than lane_cap split.
     The earlier static scheme (base(host)·salt + url-hash lane) collapsed
     hosts into only num_parts∕salt groups — TWO at the bench's salt=16
     over 32 partitions — so one hash bit split the Zipf mass into a ±24%
     partition-size spread, a straggler tail at every cluster size.
-
-    Without rn/cnt (stateless callers), every host splits url-hashed into
-    exactly min(salt, num_parts) lanes, as before.
     """
-    eff_salt = min(salt, num_parts)
-    if rn is not None and lanes is not None:
-        lane = F.pmod(rn.cast("long") - 1, lanes)
-    else:
-        lane = F.pmod(F.xxhash64(url), F.lit(eff_salt))
+    lane = F.pmod(rn.cast("long") - 1, lanes)
     return F.pmod(F.xxhash64(host_col) + lane, F.lit(num_parts)).cast("int")

@@ -90,7 +90,6 @@ def fused_fetch_parse(
     fetcher_factory,
     num_parts: int = 32,
     rate_per_host: float = 1.0,
-    salt: int = 1,
     simulated_clock: bool = True,
 ) -> DataFrame:
     """Fetch AND parse in ONE mapInPandas stage — the stage every
@@ -108,7 +107,7 @@ def fused_fetch_parse(
     """
     return fetch_stage(
         popped, fetcher_factory, PARSE_OUT_SCHEMA, _parse_fetched_batch,
-        num_parts=num_parts, rate_per_host=rate_per_host, salt=salt,
+        num_parts=num_parts, rate_per_host=rate_per_host,
         simulated_clock=simulated_clock,
     )
 

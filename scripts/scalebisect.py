@@ -44,7 +44,7 @@ def job(spark, n_urls: int, num_parts: int, mode: str) -> float:
         return time.monotonic() - t0
     parsed = fused_fetch_parse(
         popped, make_fixture_fetcher, num_parts=num_parts,
-        rate_per_host=1e9, salt=16, simulated_clock=True,
+        rate_per_host=1e9, simulated_clock=True,
     )
     parsed.filter(F.col("kind").isin("record", "text")).write.format(
         "noop").mode("overwrite").save()

@@ -1,5 +1,7 @@
 """Snapshot catalog: append / overwrite / time travel / rollback."""
 
+import pytest
+
 from outage_data_scraper_spark.catalog import SnapshotCatalog
 
 
@@ -22,6 +24,17 @@ def test_overwrite_resets_state(spark, tmp_catalog_dir):
     cat.write("t", _df(spark, [9]), mode="overwrite")
     cat.write("t", _df(spark, [10]))
     assert sorted(r.x for r in cat.read(spark, "t").collect()) == [9, 10]
+
+
+def test_write_rejects_unknown_mode(spark, tmp_catalog_dir):
+    """A mistyped mode must fail before anything is written: stored in
+    the manifest, read() would treat it as an append."""
+    cat = SnapshotCatalog(tmp_catalog_dir)
+    cat.write("t", _df(spark, [1]))
+    with pytest.raises(ValueError, match="Overwrite"):
+        cat.write("t", _df(spark, [9]), mode="Overwrite")
+    assert len(cat.snapshots("t")) == 1
+    assert [r.x for r in cat.read(spark, "t").collect()] == [1]
 
 
 def test_rollback_drops_newer_snapshots(spark, tmp_catalog_dir):

@@ -190,6 +190,14 @@ def test_request_recrawl_refetches_exactly_once(spark, tmp_path_factory):
     assert c.pending().limit(1).count() == 0
 
 
+def test_unknown_seen_mode_rejected(spark, tmp_path):
+    """A mistyped seen_mode must fail at construction, not silently run
+    the child chain's Bloom branch."""
+    with pytest.raises(ValueError, match="Exact"):
+        Crawler(spark, SnapshotCatalog(str(tmp_path)), make_fixture_fetcher,
+                seen_mode="Exact")
+
+
 def test_bloom_seen_mode_crawl(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("crawl-bloom"))
     cat = SnapshotCatalog(root)

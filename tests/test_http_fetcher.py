@@ -139,7 +139,7 @@ def test_fetch_wave_end_to_end_over_local_http(spark, server):
         r.url.rsplit("/", 1)[1]: (r.status, bytes(r.html) if r.html else None)
         for r in fetch_wave(
             df, make_http_fetcher(), num_parts=1, rate_per_host=1e9,
-            salt=1, simulated_clock=True,
+            simulated_clock=True,
         ).collect()
     }
     assert got["ok"][0] == 200 and got["ok"][1].startswith(b"payload:")

@@ -331,7 +331,7 @@ def test_token_bucket_paces_with_sim_clock():
 
 
 def test_host_pacer_per_host_isolation():
-    p = HostPacer(rate_per_host=1.0, salt=1, sim=True)
+    p = HostPacer(rate_per_host=1.0, sim=True)
     assert p.acquire("a.com") == 0.0
     assert p.acquire("b.com") == 0.0    # different host: own bucket
     assert p.acquire("a.com") > 0.0     # same host: throttled

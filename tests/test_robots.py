@@ -2,6 +2,7 @@
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from outage_data_scraper_spark.frontier.robots import parse_robots_txt, robots_gate
@@ -84,10 +85,9 @@ def test_crawl_delay_becomes_rate_override(spark, tmp_path):
     simulated clock the per-request wait equals the delay."""
     from outage_data_scraper_spark.frontier.politeness import HostPacer
 
-    p = HostPacer(rate_per_host=100.0, salt=1, sim=True,
-                  rate_overrides={"slow.com": 1.0 / 5.0})
-    assert p.acquire("slow.com") == 0.0
-    assert abs(p.acquire("slow.com") - 5.0) < 1e-9   # Crawl-delay: 5
+    p = HostPacer(rate_per_host=100.0, sim=True)
+    assert p.acquire("slow.com", 1 / 5) == 0.0
+    assert abs(p.acquire("slow.com", 1 / 5) - 5.0) < 1e-9   # Crawl-delay: 5
     assert p.acquire("fast.com") == 0.0
     assert abs(p.acquire("fast.com") - 0.01) < 1e-9  # default rate
 
@@ -111,10 +111,15 @@ def _wave_df(spark, rows):
     )
 
 
-def test_fetch_wave_per_row_rate_override(spark):
-    """Crawl-delay joined onto the wave as a column paces the bucket
-    per-row — no driver-side host dict (SCALE.md: 10^8 hosts)."""
+@pytest.mark.parametrize("n_lanes", ["absent", None, 2])
+def test_fetch_wave_per_row_rate_override(spark, n_lanes):
+    """Crawl-delay and the host's lane count, joined onto the wave as
+    columns, pace the bucket per-row — no driver-side host dict (SCALE.md:
+    10^8 hosts). Each lane takes rate/n_lanes; an absent or null n_lanes
+    is one lane at the full rate."""
     from outage_data_scraper_spark.frontier.fetch import fetch_wave
+
+    lanes = 1 if n_lanes in ("absent", None) else n_lanes
 
     def wave(host, override):
         rows = [
@@ -122,18 +127,22 @@ def test_fetch_wave_per_row_rate_override(spark):
              0, 0, 0, i, 1, 0, override)
             for i in range(3)
         ]
+        df = _wave_df(spark, rows)
+        if n_lanes != "absent":
+            df = df.withColumn("n_lanes", F.lit(n_lanes).cast("long"))
         fetched = fetch_wave(
-            _wave_df(spark, rows),
+            df,
             lambda: (lambda url, fam: (200, None, b"ok")),
-            num_parts=1, rate_per_host=100.0, salt=1, simulated_clock=True,
+            num_parts=1, rate_per_host=100.0, simulated_clock=True,
         ).collect()
         return [r.wait_s for r in sorted(fetched, key=lambda r: r.child_seq)]
 
     slow = wave("slow.com", 1.0 / 5.0)
     assert slow[0] == 0.0
-    assert all(abs(w - 5.0) < 1e-9 for w in slow[1:])  # Crawl-delay: 5
+    assert all(abs(w - 5.0 * lanes) < 1e-9 for w in slow[1:])  # Crawl-delay: 5
     fast = wave("fast.com", None)
-    assert all(abs(w - 0.01) < 1e-9 for w in fast[1:])  # default rate
+    assert fast[0] == 0.0
+    assert all(abs(w - 0.01 * lanes) < 1e-9 for w in fast[1:])  # default rate
 
 
 def test_fetch_wave_ordering_law_across_arrow_batches(spark):
@@ -154,7 +163,7 @@ def test_fetch_wave_ordering_law_across_arrow_batches(spark):
         fetched = fetch_wave(
             _wave_df(spark, rows),
             lambda: (lambda url, fam: (200, None, b"ok")),
-            num_parts=1, rate_per_host=1e9, salt=1, simulated_clock=True,
+            num_parts=1, rate_per_host=1e9, simulated_clock=True,
         ).collect()
         got = [r.child_seq for r in fetched]
         assert got == sorted(got), "fetch order violated the ordering law"
@@ -184,7 +193,7 @@ def test_fused_fetch_parse_ordering_law_across_arrow_batches(spark):
         parsed = fused_fetch_parse(
             _wave_df(spark, rows).drop("rate_override"),
             lambda: (lambda url, fam: (404, "nope", None)),
-            num_parts=1, rate_per_host=1e9, salt=1, simulated_clock=True,
+            num_parts=1, rate_per_host=1e9, simulated_clock=True,
         ).collect()
         got = [r.child_seq for r in parsed]
         assert got == sorted(got), "fused path violated the ordering law"
@@ -211,7 +220,7 @@ def test_small_host_paces_at_full_rate_despite_salt(spark):
     fetched = fetch_wave(
         popped,
         lambda: (lambda url, fam: (200, None, b"ok")),
-        num_parts=8, rate_per_host=2.0, salt=4, simulated_clock=True,
+        num_parts=8, rate_per_host=2.0, simulated_clock=True,
     ).collect()
     waits = sorted(r.wait_s for r in fetched)
     assert waits[0] == 0.0
@@ -267,8 +276,7 @@ def test_aggregate_rate_across_lanes_bounded_real_clock(spark):
 
     rate = 60.0
     fetched = fetch_wave(
-        popped, factory, num_parts=8, rate_per_host=rate, salt=4,
-        simulated_clock=False,
+        popped, factory, num_parts=8, rate_per_host=rate, simulated_clock=False,
     ).collect()
     assert len(fetched) == 60
     by_lane: dict[int, list[float]] = {}

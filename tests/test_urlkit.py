@@ -1,5 +1,7 @@
 """URL column-function semantics (engine addition; SURVEY.md §4.3)."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from outage_data_scraper_spark.functions import urlkit
@@ -32,13 +34,18 @@ def test_canonicalize_bare_host(spark):
 
 def test_salted_part_co_locates_host(spark):
     df = spark.createDataFrame(
-        [(f"https://hot.example.com/{i}",) for i in range(50)], "url string"
+        [(f"https://hot.example.com/{i}", i + 1) for i in range(50)],
+        "url string, rn int",
     ).select(
-        urlkit.salted_part(urlkit.host(F.col("url")), F.col("url"), 32, salt=4).alias("p")
+        urlkit.salted_part(
+            urlkit.host(F.col("url")), 32, F.col("rn"), F.lit(4)
+        ).alias("p")
     )
-    parts = {r["p"] for r in df.collect()}
-    # one host spreads over at most `salt` partitions
-    assert 1 <= len(parts) <= 4
+    sizes = Counter(r["p"] for r in df.collect())
+    # one host spreads over at most `lanes` partitions ...
+    assert 1 <= len(sizes) <= 4
+    # ... and (rn-1) mod lanes splits its rows evenly across them (±1)
+    assert len(sizes) == 4 and max(sizes.values()) - min(sizes.values()) <= 1
 
 
 def test_registered_domain_suffix_law(spark):
