@@ -13,8 +13,8 @@ Layout per table::
 
     <root>/<table>/
         _manifest.json          # {"snapshots": [{"id", "mode", "dir", "wave"}]}
-        snap-00000001/part-*.parquet
-        snap-00000002/...
+        snap=00000001/part-*.parquet
+        snap=00000002/<partition>=<value>/part-*.parquet
 
 Commit protocol: data dir is fully written first, then the manifest is
 replaced via os.replace (atomic on POSIX). A reader only sees snapshots
@@ -35,6 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _MANIFEST = "_manifest.json"
+
+
+def _live(snaps: list[dict]) -> list[dict]:
+    """The snapshots a read sees: the last overwrite plus later appends."""
+    start = max((i for i, s in enumerate(snaps) if s["mode"] == "overwrite"), default=0)
+    return snaps[start:]
 
 
 class SnapshotCatalog:
@@ -69,6 +75,15 @@ class SnapshotCatalog:
             json.dump(manifest, f)
         os.replace(tmp, path)  # atomic commit
 
+    def _retain(self, name: str, keep) -> None:
+        """Commit a manifest of the snapshots ``keep`` accepts, then remove
+        the other snapshots' data dirs (readers only see the manifest)."""
+        snaps = self._load_manifest(name)["snapshots"]
+        self._commit_manifest(name, {"snapshots": [s for s in snaps if keep(s)]})
+        for s in snaps:
+            if not keep(s):
+                shutil.rmtree(os.path.join(self._table_dir(name), s["dir"]), ignore_errors=True)
+
     # -- public API (Iceberg-shaped) ----------------------------------------
     def exists(self, name: str) -> bool:
         return bool(self._load_manifest(name)["snapshots"])
@@ -94,8 +109,9 @@ class SnapshotCatalog:
         find the last consistent wave across tables. ``partition_by``
         hive-partitions the snapshot's files (the stand-in for Iceberg's
         partition spec — e.g. records PARTITIONED BY (state, layout),
-        pages by (url bucket, day), FIXTURES.md §1.1) so scans with
-        partition predicates prune files.
+        pages by day, FIXTURES.md §1.1) so scans with partition
+        predicates prune files. An append must keep the live snapshots'
+        spec; an overwrite may change it.
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
@@ -103,17 +119,24 @@ class SnapshotCatalog:
         # __missing__ is not), so two racing first-writers get ONE lock
         with self._locks.setdefault(name, threading.Lock()):
             manifest = self._load_manifest(name)
+            live = _live(manifest["snapshots"])
+            spec = live[-1].get("partition_by") if live else None
+            if mode == "append" and live and list(spec or []) != list(partition_by or []):
+                raise ValueError(  # one scan reads one dir layout per live set
+                    f"table {name!r}: append with partition spec {partition_by} "
+                    f"but the live snapshots use {spec}"
+                )
             snap_id = (manifest["snapshots"][-1]["id"] + 1) if manifest["snapshots"] else 1
-            data_dir = os.path.join(self._table_dir(name), f"snap-{snap_id:08d}")
+            snap_dir = f"snap={snap_id:08d}"
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            writer.parquet(data_dir)
+            writer.parquet(os.path.join(self._table_dir(name), snap_dir))
             manifest["snapshots"].append(
                 {
                     "id": snap_id,
                     "mode": mode,
-                    "dir": f"snap-{snap_id:08d}",
+                    "dir": snap_dir,
                     "wave": wave,
                     "partition_by": partition_by,
                 }
@@ -130,18 +153,14 @@ class SnapshotCatalog:
     ) -> DataFrame:
         """Read table state as of ``snapshot`` (default: current).
 
-        State = union of appended snapshots since (and including) the last
-        overwrite at or before the requested snapshot — i.e. Iceberg
-        time travel over append/replace snapshots.
+        State = the last overwrite at or before the requested snapshot plus
+        every later append (Iceberg time travel over append/replace
+        snapshots), read as one scan over the live snapshot dirs.
         """
         snaps = self.snapshots(name)
         if snapshot is not None:
             snaps = [s for s in snaps if s["id"] <= snapshot]
-        live: list[dict] = []
-        for s in snaps:
-            if s["mode"] == "overwrite":
-                live = []
-            live.append(s)
+        live = _live(snaps)
         if not live:
             if schema is None:
                 raise ValueError(f"table {name!r} is empty and no schema given")
@@ -150,35 +169,19 @@ class SnapshotCatalog:
             # table — the first crawl wave's pending anti-join — then
             # plans away instead of shuffling an opaque empty RDD scan
             return spark.createDataFrame([], schema).where("false")
-
-        def read_one(s: dict):
-            path = os.path.join(self._table_dir(name), s["dir"])
-            reader = spark.read
-            # hive-partitioned snapshots need per-dir discovery; schema is
-            # applied only to unpartitioned snapshots (partition columns
-            # come back via discovery)
-            if schema is not None and not s.get("partition_by"):
-                reader = reader.schema(schema)
-            return reader.parquet(path)
-
-        dfs = [read_one(s) for s in live]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=False)
-        if schema is not None:
-            out = out.select(*[f.name for f in schema.fields])
-        return out
+        # snap=<id> dirs under basePath are one more hive partition level,
+        # so the live set is one FileScan whatever its depth; partition
+        # columns named in ``schema`` take the schema's type
+        table_dir = self._table_dir(name)
+        paths = [os.path.join(table_dir, s["dir"]) for s in live]
+        reader = spark.read.option("basePath", table_dir)
+        if schema is None:
+            return reader.parquet(*paths).drop("snap")
+        return reader.schema(schema).parquet(*paths).select(*schema.fieldNames())
 
     def rollback(self, name: str, snapshot: int) -> None:
         """Drop snapshots newer than ``snapshot`` (crash-recovery path)."""
-        manifest = self._load_manifest(name)
-        keep = [s for s in manifest["snapshots"] if s["id"] <= snapshot]
-        dropped = [s for s in manifest["snapshots"] if s["id"] > snapshot]
-        self._commit_manifest(name, {"snapshots": keep})
-        for s in dropped:
-            shutil.rmtree(
-                os.path.join(self._table_dir(name), s["dir"]), ignore_errors=True
-            )
+        self._retain(name, lambda s: s["id"] <= snapshot)
 
     def last_wave(self, name: str) -> int | None:
         """Highest wave id committed for this table (resume bookkeeping)."""
@@ -188,8 +191,9 @@ class SnapshotCatalog:
     def compact(self, spark: SparkSession, name: str, wave: int | None = None) -> int:
         """Rewrite the table's live state as one overwrite snapshot
         (Iceberg's rewrite_data_files analog). Long crawls append one
-        snapshot per wave per table; periodic compaction keeps the
-        read-side union shallow. Keeps the last snapshot's partition spec.
+        snapshot per wave per table, each with its own small files;
+        periodic compaction cuts the file count a read lists and opens.
+        Keeps the last snapshot's partition spec.
         Old snapshot dirs are retired from the manifest (readers only see
         the manifest) and removed.
 
@@ -207,15 +211,7 @@ class SnapshotCatalog:
         snap_id = self.write(
             name, current, mode="overwrite", wave=wave, partition_by=partition_by
         )
-        # drop retired data dirs (everything before the compaction snapshot)
-        manifest = self._load_manifest(name)
-        keep = [s for s in manifest["snapshots"] if s["id"] >= snap_id]
-        retired = [s for s in manifest["snapshots"] if s["id"] < snap_id]
-        self._commit_manifest(name, {"snapshots": keep})
-        for s in retired:
-            shutil.rmtree(
-                os.path.join(self._table_dir(name), s["dir"]), ignore_errors=True
-            )
+        self._retain(name, lambda s: s["id"] >= snap_id)
         return snap_id
 
     def drop(self, name: str) -> None:

@@ -341,13 +341,13 @@ class Crawler:
             run_ts.alias("run_ts"), F.col("wave"),
         )
 
-        # pages partition spec (bucket(16, url), days(warc_ts)) per
-        # FIXTURES.md §1.1 — month/day filters (O24) prune files
+        # pages partition spec days(warc_ts) per FIXTURES.md §1.1 —
+        # month/day filters (O24) prune files; run_ts is one day per
+        # wave, so each fetch task writes one pages file
         pages = parsed.filter(F.col("kind") == "text").select(
             "url", run_ts.alias("warc_ts"),
             F.lit(None).cast("binary").alias("html"),
             F.col("text"), F.lit("en").alias("lang"),
-            F.pmod(F.xxhash64("url"), F.lit(16)).cast("string").alias("url_bucket"),
             F.date_format(run_ts, "yyyy-MM-dd").alias("warc_day"),
         )
 
@@ -376,9 +376,7 @@ class Crawler:
             )
         if n_pages:
             writes.append(
-                lambda: self.cat.write(
-                    "pages", pages, wave=wave, partition_by=["url_bucket", "warc_day"]
-                )
+                lambda: self.cat.write("pages", pages, wave=wave, partition_by=["warc_day"])
             )
         # children: keep first discovery per URL (visited semantics), then
         # drop anything already enqueued — exact anti-join or Bloom. This
@@ -442,11 +440,10 @@ class Crawler:
         """Long-crawl maintenance: rewrite every table's live state as one
         snapshot (Iceberg rewrite_data_files analog). Appends are one
         snapshot per wave per table, so a 10^4-wave crawl would otherwise
-        union 10^4 snapshot dirs per read — compaction keeps the read-side
-        union shallow and the `pending` anti-join scanning one compacted
-        fetch_log instead of the whole append history. Safe at any wave
-        boundary: compact() stamps the snapshot with the table's last
-        committed wave, so resume() keeps it."""
+        list and open 10^4 snapshot dirs of small files per read — the
+        `pending` anti-join included. Compaction cuts that file count.
+        Safe at any wave boundary: compact() stamps the snapshot with the
+        table's last committed wave, so resume() keeps it."""
         for table in ("records", "pages", "fetch_log", "frontier", "waves", "recrawl"):
             if self.cat.exists(table):
                 self.cat.compact(self.spark, table)

@@ -73,6 +73,13 @@ def pop_wave(
     divides the host's rate by. Popping marks nothing: a URL is done once
     the wave appends its fetch_log row, and the next wave's ``pending()``
     anti-joins it away (Crawler.pending).
+
+    The per-host ``rn <= per_host_k`` cut is combined map-side: Spark
+    plans a ``WindowGroupLimit`` whose Partial half keeps each task's
+    top k per host below the host exchange (tests/test_plans.py pins
+    it). Above ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (default 1000) no ``WindowGroupLimit`` is planned, so one host's
+    whole pending pool crosses the shuffle and sorts in one task.
     """
     w = Window.partitionBy("host").orderBy(*[F.col(c).asc() for c in ORDER_COLS])
     wc = Window.partitionBy("host")

@@ -22,7 +22,8 @@ from pyspark.sql.types import (
 
 # ---------------------------------------------------------------------------
 # Core input: Common-Crawl-style pages table (BASELINE.json input_hint).
-# Partition spec at scale: (bucket(16, url), days(warc_ts)).
+# Partition spec: days(warc_ts) as a warc_day column. No bucket(16, url):
+# that serves point lookups by URL, and no query issues one.
 # ---------------------------------------------------------------------------
 PAGES = StructType(
     [

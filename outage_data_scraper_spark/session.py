@@ -77,8 +77,8 @@ def get_spark(
         # scale behavior are unchanged (a production driver running a
         # query mix wants the same headroom).
         .config(CODEGEN_CACHE_CONF, codegen_cache)
-        # partition columns stay strings — snapshot unions must not see
-        # a layout='8' directory flip to int via type inference
+        # partition columns stay strings — a schemaless catalog read must
+        # not see a layout='8' directory flip to int via type inference
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

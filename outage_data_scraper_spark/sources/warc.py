@@ -229,17 +229,12 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
 
 def warc_to_pages(pages: DataFrame) -> DataFrame:
     """Project a read_warc frame onto the CANONICAL pages shape
-    (schemas.PAGES + the crawler's partition columns bucket(16, url) /
-    days(warc_ts)), so an archive batch appends to the very same
+    (schemas.PAGES + the crawler's days(warc_ts) partition column
+    warc_day), so an archive batch appends to the very same
     catalog table the live crawler writes (frontier/crawler.py's pages
     projection) and every downstream query is source-agnostic."""
     return pages.select(
-        "url",
-        "warc_ts",
-        "html",
-        "text",
-        "lang",
-        F.pmod(F.xxhash64("url"), F.lit(16)).cast("string").alias("url_bucket"),
+        "url", "warc_ts", "html", "text", "lang",
         F.date_format("warc_ts", "yyyy-MM-dd").alias("warc_day"),
     )
 

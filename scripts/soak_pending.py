@@ -2,8 +2,9 @@
 
 The frontier is an append-only enqueue log and "pending" is derived
 (frontier ANTI fetch_log), so a 10³-wave crawl accumulates 10³ fetch_log
-snapshot dirs; without maintenance every pending() probe unions the whole
-append history. This soak simulates a 10⁶-URL crawl across N_WAVES waves
+snapshot dirs; without maintenance every pending() probe lists and scans
+the files of the whole append history (one scan, but one more dir of small
+files per wave). This soak simulates a 10⁶-URL crawl across N_WAVES waves
 (each wave appends one fetch_log snapshot marking ~10⁶/N_WAVES URLs done —
 the append pattern of run_wave, without paying fetch/parse time) and times
 the pending anti-join each wave's pop pays (run() stops on an empty pop, no

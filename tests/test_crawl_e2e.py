@@ -116,10 +116,10 @@ def test_kill_and_resume_no_refetch(spark, tmp_path_factory):
     c.bootstrap(fixture_miniweb_seeds(spark))
     c.run_wave(1)
     c.run_wave(2)
-    # simulate a mid-wave kill: records snapshot for wave 3 committed, but
-    # no fetch_log / wave marker
+    # simulate a mid-wave kill: records snapshot for wave 3 committed (with
+    # the crawler's records spec), but no fetch_log / wave marker
     partial = cat.read(spark, "records").limit(3)
-    cat.write("records", partial, wave=3)
+    cat.write("records", partial, wave=3, partition_by=["state", "layout"])
     assert c.resume() == 3  # rolls the orphan snapshot back
     before = cat.read(spark, "records").count()
     c.run(max_waves=30)

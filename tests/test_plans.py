@@ -224,8 +224,27 @@ def test_frontier_pop_single_shuffle(spark):
     popped = pop_wave(frontier, per_host_k=3, num_parts=8)
     n = count_exchanges(popped)
     # one exchange for the window partitionBy(host); the salted repartition
-    # for fetch is applied later in fetch_wave
+    # for fetch is applied later in fetch_stage
     assert n <= 2, f"frontier pop plans {n} exchanges"
+
+
+def test_frontier_pop_top_k_combined_map_side(spark):
+    """pop_wave's per-host `rn <= k` cut plans a WindowGroupLimit whose
+    Partial half sits below the host hash exchange (each map task keeps
+    its top k per host) and whose Final half sits above it. Without the
+    Partial half a hot host's whole pending pool crosses the shuffle."""
+    from outage_data_scraper_spark.frontier.priority import pop_wave, seeds_to_frontier
+    from outage_data_scraper_spark.sources.seeds import synthetic_seeds
+
+    frontier = seeds_to_frontier(synthetic_seeds(spark, 1000, 50))
+    popped = pop_wave(frontier, per_host_k=4, num_parts=8)
+    nodes = _plan_nodes(popped._jdf.queryExecution().executedPlan().toString())
+    xs = [i for i, (_, t) in enumerate(nodes) if t.startswith("Exchange hashpartitioning(host")]
+    assert len(xs) == 1, [t for _, t in nodes]
+    below = _subtree(nodes, xs[0])
+    above = [t for _, t in nodes[: xs[0]]]
+    assert any(t.startswith("WindowGroupLimit") and t.endswith("4, Partial") for t in below)
+    assert any(t.startswith("WindowGroupLimit") and t.endswith("4, Final") for t in above)
 
 
 def test_records_partition_pruning(spark, tmp_path):

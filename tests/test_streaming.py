@@ -76,7 +76,7 @@ def test_available_now_is_incremental_and_exactly_once(spark, dirs):
 
 
 def test_crawler_pages_dir_feeds_stream(spark, tmp_path):
-    """The snapshot catalog's data layout (snap-*/part-*.parquet) is
+    """The snapshot catalog's data layout (snap=*/part-*.parquet) is
     directly consumable as a streaming source via glob."""
     from outage_data_scraper_spark import schemas
     from outage_data_scraper_spark.catalog import SnapshotCatalog

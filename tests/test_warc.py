@@ -164,8 +164,8 @@ def test_read_warc_distributed(spark, tmp_path):
 
 def test_warc_to_pages_canonical_and_catalog_append(spark, tmp_path):
     """An archive batch must land in the SAME pages table the live
-    crawler writes: canonical column set + the (url_bucket, warc_day)
-    partition spec, appended through SnapshotCatalog."""
+    crawler writes: canonical column set + the warc_day partition spec,
+    appended through SnapshotCatalog."""
     from outage_data_scraper_spark.catalog import SnapshotCatalog
 
     d = str(tmp_path / "warcs")
@@ -174,11 +174,9 @@ def test_warc_to_pages_canonical_and_catalog_append(spark, tmp_path):
         with open(os.path.join(d, name), "wb") as f:
             f.write(blob)
     pages = warc.warc_to_pages(warc.read_warc(spark, d))
-    assert pages.columns == [
-        "url", "warc_ts", "html", "text", "lang", "url_bucket", "warc_day"
-    ]
+    assert pages.columns == ["url", "warc_ts", "html", "text", "lang", "warc_day"]
     cat = SnapshotCatalog(str(tmp_path / "cat"))
-    cat.write("pages", pages, wave=0, partition_by=["url_bucket", "warc_day"])
+    cat.write("pages", pages, wave=0, partition_by=["warc_day"])
     back = cat.read(spark, "pages")
     assert back.count() == 60
     assert set(back.columns) >= {"url", "warc_ts", "text", "lang"}
