@@ -2685,12 +2685,12 @@ def q29_bloom_seen_filter(spark, sf_dir):
     """O32 Bloom fast path. No-false-negative sketch; at the registered
     (n, fpp=1e-4) point its false-positive set is empty for this input,
     so the exact anti-join oracle checks it value-exact."""
-    from outage_data_scraper_spark.frontier.seen import bloom_from_df, filter_unseen_bloom
+    from outage_data_scraper_spark.frontier.seen import bloom_from_df, filter_unseen_sketch
 
     fr = _frontier_from_documents(_t(spark, sf_dir, "documents"))
     seen = fr.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 0).select("url")
     bloom = bloom_from_df(seen, fpp=1e-4)
-    return filter_unseen_bloom(fr.select("url"), bloom)
+    return filter_unseen_sketch(fr.select("url"), bloom)
 
 
 def q40_cuckoo_seen_filter(spark, sf_dir):
@@ -2698,15 +2698,12 @@ def q40_cuckoo_seen_filter(spark, sf_dir):
     incl. the value-exact exact-anti-join oracle at the registered
     fingerprint width) plus deletability for re-crawl scheduling (tests
     prove delete → refetch passes)."""
-    from outage_data_scraper_spark.frontier.seen import (
-        cuckoo_from_df,
-        filter_unseen_cuckoo,
-    )
+    from outage_data_scraper_spark.frontier.seen import cuckoo_from_df, filter_unseen_sketch
 
     fr = _frontier_from_documents(_t(spark, sf_dir, "documents"))
     seen = fr.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 0).select("url")
     cf = cuckoo_from_df(seen)
-    return filter_unseen_cuckoo(fr.select("url"), cf)
+    return filter_unseen_sketch(fr.select("url"), cf)
 
 
 def q30_session_state_machine(spark, sf_dir):

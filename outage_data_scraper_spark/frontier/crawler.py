@@ -45,12 +45,43 @@ from ..catalog import SnapshotCatalog
 from ..parsers.parse import fused_fetch_parse, parse_wave  # noqa: F401
 from .fetch import fetch_wave  # noqa: F401
 from .priority import pop_wave, seeds_to_frontier
-from .seen import filter_unseen_bloom, filter_unseen_exact
+# filter_unseen_bloom: the sketch probe under the module-attribute name
+# such wrappers patch; the child chain calls it through this global
+from .seen import BloomFilter, bloom_from_df, filter_unseen_exact
+from .seen import filter_unseen_sketch as filter_unseen_bloom
 
 WAVES_SCHEMA = (
     "wave int, popped long, ok long, failed long, records long, "
     "children long, wall_s double"
 )
+
+
+def first_discoveries(parsed: DataFrame, wave: int) -> DataFrame:
+    """The wave's discovered children as frontier rows, one per child URL:
+    its first discovery by (event_seq, seed_seq, depth, child_seq,
+    child_rank) — the reference's visited semantics. The ``rn == 1`` cut
+    plans a WindowGroupLimit whose Partial half keeps each map task's
+    top-1 per URL below the child_url exchange (tests/test_plans.py)."""
+    w_first = Window.partitionBy("child_url").orderBy(
+        "event_seq", "seed_seq", "depth", "child_seq", "child_rank"
+    )
+    return (
+        parsed.filter(F.col("kind") == "child")
+        .withColumn("rn", F.row_number().over(w_first))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("child_url").alias("url"),
+            urlkit.host(F.col("child_url")).alias("host"),
+            F.lit(0).alias("salted_part"),
+            F.lit(0.0).alias("priority"),
+            (F.col("depth") + 1).alias("depth"),
+            "event_seq", "seed_seq",
+            F.col("child_rank").alias("child_seq"),
+            "state", "layout", "emc", "family",
+            F.lit("pending").alias("status"),
+            F.lit(wave).alias("wave"),
+        )
+    )
 
 
 @dataclass
@@ -82,6 +113,9 @@ class Crawler:
         wave_budget: int | None = None,
         domain_budget: int | None = None,
     ):
+        if per_host_k < 1:
+            # a zero-row pop reads as "crawl done": run() would return []
+            raise ValueError(f"per_host_k must be >= 1, got {per_host_k!r}")
         self.spark = spark
         self.cat = catalog
         self.fetcher_factory = fetcher_factory
@@ -91,6 +125,8 @@ class Crawler:
         self.rate_per_host = rate_per_host
         if seen_mode not in ("exact", "bloom"):
             raise ValueError(f"seen_mode must be 'exact' or 'bloom', got {seen_mode!r}")
+        if seen_mode == "bloom":
+            BloomFilter.sized(1, bloom_fpp)  # raises unless 0 < fpp < 1
         self.seen_mode = seen_mode
         self.simulated_clock = simulated_clock
         self.BLOOM_EXPECTED_N = bloom_expected_n
@@ -110,35 +146,30 @@ class Crawler:
         frontier = seeds_to_frontier(seeds)
         self.cat.write("frontier", frontier, mode="overwrite", wave=0)
         if self.seen_mode == "bloom":
-            self._bloom_add(frontier.select("url"), wave=0, reset=True)
+            self._bloom_add(frontier.select("url"), wave=0)
 
     # -- persistent Bloom seen-set --------------------------------------------
     # The Bloom filter is incrementally maintained in the seen_bloom table
-    # (one merged bitset row per wave, wave-stamped): each wave ORs in only
-    # the NEWLY enqueued URLs instead of rebuilding from the full frontier —
-    # at 10^10-URL scale a rebuild would be a full-table scan per wave.
+    # (one merged bitset row, overwritten and wave-stamped each wave): each
+    # wave ORs in only the NEWLY enqueued URLs instead of rebuilding from
+    # the full frontier — at 10^10-URL scale a rebuild would be a
+    # full-table scan per wave.
     def _bloom_load(self):
-        from .seen import BloomFilter
-
         if not self.cat.exists("seen_bloom"):
             return None
-        row = (
-            self.cat.read(self.spark, "seen_bloom")
-            .orderBy(F.col("wave").desc())
-            .first()
-        )
+        # only ever overwritten: the live set is the one current row
+        row = self.cat.read(self.spark, "seen_bloom").first()
         if row is None:
             return None
         return BloomFilter.from_bytes(row.m, row.k, bytes(row.bitset))
 
-    def _bloom_add(self, urls: DataFrame, wave: int, reset: bool = False):
-        from .seen import BloomFilter, bloom_from_df
-
+    def _bloom_add(self, urls: DataFrame, wave: int, base=None):
+        """OR urls into ``base`` (the bitset the caller already holds;
+        None starts afresh) and persist the result as seen_bloom."""
         fresh = bloom_from_df(
             urls, expected_n=self.BLOOM_EXPECTED_N, fpp=self.BLOOM_FPP
         )
-        current = None if reset else self._bloom_load()
-        merged = fresh if current is None else current.merge(fresh)
+        merged = fresh if base is None else base.merge(fresh)
         row = self.spark.createDataFrame(
             [(wave, merged.m, merged.k, merged.to_bytes())],
             "wave int, m long, k int, bitset binary",
@@ -384,32 +415,15 @@ class Crawler:
         # concurrent pool as the three table commits above (it is usually
         # the wave's longest tail: window + anti-join + write + bloom OR).
         def child_chain() -> int:
-            disc = parsed.filter(F.col("kind") == "child")
-            w_first = Window.partitionBy("child_url").orderBy(
-                "event_seq", "seed_seq", "depth", "child_seq", "child_rank"
-            )
-            children = (
-                disc.withColumn("rn", F.row_number().over(w_first))
-                .filter(F.col("rn") == 1)
-                .select(
-                    F.col("child_url").alias("url"),
-                    urlkit.host(F.col("child_url")).alias("host"),
-                    F.lit(0).alias("salted_part"),
-                    F.lit(0.0).alias("priority"),
-                    (F.col("depth") + 1).alias("depth"),
-                    "event_seq", "seed_seq",
-                    F.col("child_rank").alias("child_seq"),
-                    "state", "layout", "emc", "family",
-                    F.lit("pending").alias("status"),
-                    F.lit(wave).alias("wave"),
-                )
-            )
+            children = first_discoveries(parsed, wave)
             if self.seen_mode == "exact":
                 fresh = filter_unseen_exact(children, self.frontier().select("url"))
             else:
+                # one seen_bloom read per wave: the bitset probed here is
+                # the base the wave's new URLs are ORed into below
                 bloom = self._bloom_load()
                 if bloom is None:  # e.g. bootstrapped before bloom mode existed
-                    bloom = self._bloom_add(self.frontier().select("url"), wave=wave - 1, reset=True)
+                    bloom = self._bloom_add(self.frontier().select("url"), wave=wave - 1)
                 fresh = filter_unseen_bloom(children, bloom)
             fresh = fresh.cache()
             n = fresh.count()
@@ -417,7 +431,7 @@ class Crawler:
                 if n:
                     self.cat.write("frontier", fresh, wave=wave)
                     if self.seen_mode == "bloom":
-                        self._bloom_add(fresh.select("url"), wave=wave)
+                        self._bloom_add(fresh.select("url"), wave=wave, base=bloom)
             finally:
                 fresh.unpersist()
             return n

@@ -141,31 +141,12 @@ def _domain_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFr
         "__dom", F.col("quota").alias("__quota")
     )
     full_order = [F.col(c).asc() for c in ORDER_COLS] + [F.col("url").asc()]
-    # global stats: the first law column that varies anywhere — columns
-    # before it are constant over the whole pool, hence within every
-    # domain, so bucketing it is monotone in the lexicographic law
-    stats_cols = [F.count(F.lit(1)).alias("n")]
-    for c in ORDER_COLS:
-        stats_cols += [
-            F.min(c).alias(f"mn_{c}"),
-            F.max(c).alias(f"mx_{c}"),
-            F.count(c).alias(f"nn_{c}"),
-        ]
-    st = pool.agg(*stats_cols).collect()[0]
-    n = int(st["n"])
-    null_cols = [c for c in ORDER_COLS if int(st[f"nn_{c}"]) != n]
-    if null_cols:
-        raise ValueError(
-            f"_domain_cut: NULLs in order column(s) {null_cols}; the "
-            "histogram cut requires non-null law columns"
-        )
-    cut_col = None
-    for c in ORDER_COLS:
-        if st[f"mn_{c}"] is not None and st[f"mx_{c}"] > st[f"mn_{c}"]:
-            cut_col = c
-            break
+    # global stats: the law columns before the first one that varies
+    # anywhere are constant over the whole pool, hence within every
+    # domain, so its bucket is monotone in each domain's law too
+    n, bucket = _law_buckets(pool, "_domain_cut", n_buckets)
     wd = Window.partitionBy("__dom").orderBy(*full_order)
-    if cut_col is None or n == 0:
+    if bucket is None or n == 0:
         # every law column constant: rows tie up to url — rank directly
         return (
             pool.withColumn("__drn", F.row_number().over(wd))
@@ -173,12 +154,6 @@ def _domain_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFr
             .filter(F.col("__drn") <= F.col("__quota"))
             .drop("__dom", "__drn", "__quota")
         )
-    mn, mx = float(st[f"mn_{cut_col}"]), float(st[f"mx_{cut_col}"])
-    width = (mx - mn) / n_buckets or 1.0
-    bucket = F.least(
-        F.floor((F.col(cut_col) - F.lit(mn)) / F.lit(width)).cast("int"),
-        F.lit(n_buckets - 1),
-    )
     # per-domain boundary: the first bucket whose cumulative count
     # reaches the quota (window input ≤ n_buckets rows per domain); a
     # domain whose whole pool is under quota has no boundary row and
@@ -219,24 +194,20 @@ def _domain_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFr
     return keep.unionByName(edge).drop("__dom", "__b", "__bdry", "__slots")
 
 
-def _budget_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFrame:
-    """EXACT global top-``budget`` rows by the crawl-ordering law (+url
-    tiebreak) without a single-reducer full sort — the two-phase
-    histogram pattern (operators/quantiles.py):
+def _law_buckets(pool: DataFrame, cut: str, n_buckets: int):
+    """The stats pass both histogram cuts share: one aggregate of count
+    plus (min, max, non-null count) per law column. Returns ``(n,
+    bucket)``, where ``bucket`` is an int bucket Column over the FIRST
+    law column with span > 0 — the columns before it are constant over
+    the pool, so lexicographic order degenerates to (chosen, rest) and
+    bucketing it is monotone in the law — or None when every law column
+    is constant (or the pool is empty).
 
-    1. one stats pass: count + (min, max) of every law column; pick the
-       FIRST column with span > 0 — columns before it are constant over
-       this wave's pool, so lexicographic order degenerates to (chosen,
-       rest) and bucketing the chosen column is monotone in the law.
-    2. histogram on that column (≤ n_buckets rows per task, map-side
-       combined); the driver prefix-sums it and finds the boundary
-       bucket: buckets strictly before it are kept WHOLE (no sort at
-       all), and only the boundary bucket — ≈ pool/n_buckets rows —
-       is sorted for the remaining slots.
-
-    The pool is localCheckpointed first so the per-host window +
-    anti-join chain is computed once, not once per pass."""
-    pool = popped.localCheckpoint(eager=True)
+    The histogram cut is provably equal to the sorted law ONLY for
+    non-null order columns: a NULL bucket evaluates NULL and would be
+    silently excluded by both phase filters, while the sorted-limit law
+    places NULLs FIRST. All frontier law columns are non-null by
+    construction — enforce it so a future nullable column fails loud."""
     stats_cols = [F.count(F.lit(1)).alias("n")]
     for c in ORDER_COLS:
         stats_cols += [
@@ -246,35 +217,47 @@ def _budget_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFr
         ]
     st = pool.agg(*stats_cols).collect()[0]
     n = int(st["n"])
-    # The histogram cut is provably equal to orderBy().limit() ONLY for
-    # non-null order columns: a NULL bucket evaluates NULL and would be
-    # silently excluded by both phase filters, while the sorted-limit
-    # law places NULLs FIRST. All frontier law columns are non-null by
-    # construction — enforce it so a future nullable column fails loud.
     null_cols = [c for c in ORDER_COLS if int(st[f"nn_{c}"]) != n]
     if null_cols:
         raise ValueError(
-            f"_budget_cut: NULLs in order column(s) {null_cols}; the "
+            f"{cut}: NULLs in order column(s) {null_cols}; the "
             "histogram cut requires non-null law columns"
         )
-    if n <= budget:
-        return pool
-    cut_col = None
     for c in ORDER_COLS:
         if st[f"mn_{c}"] is not None and st[f"mx_{c}"] > st[f"mn_{c}"]:
-            cut_col = c
-            break
+            mn, mx = float(st[f"mn_{c}"]), float(st[f"mx_{c}"])
+            width = (mx - mn) / n_buckets or 1.0
+            return n, F.least(
+                F.floor((F.col(c) - F.lit(mn)) / F.lit(width)).cast("int"),
+                F.lit(n_buckets - 1),
+            )
+    return n, None
+
+
+def _budget_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFrame:
+    """EXACT global top-``budget`` rows by the crawl-ordering law (+url
+    tiebreak) without a single-reducer full sort — the two-phase
+    histogram pattern (operators/quantiles.py):
+
+    1. one stats pass (_law_buckets) buckets the FIRST law column that
+       varies over this wave's pool — monotone in the law.
+    2. histogram on that column (≤ n_buckets rows per task, map-side
+       combined); the driver prefix-sums it and finds the boundary
+       bucket: buckets strictly before it are kept WHOLE (no sort at
+       all), and only the boundary bucket — ≈ pool/n_buckets rows —
+       is sorted for the remaining slots.
+
+    The pool is localCheckpointed first so the per-host window +
+    anti-join chain is computed once, not once per pass."""
+    pool = popped.localCheckpoint(eager=True)
+    n, bucket = _law_buckets(pool, "_budget_cut", n_buckets)
+    if n <= budget:
+        return pool
     full_order = [F.col(c).asc() for c in ORDER_COLS] + [F.col("url").asc()]
-    if cut_col is None:
+    if bucket is None:
         # every law column constant: all rows tie up to url — the sort
         # is unavoidable but the pool is exactly this degenerate case
         return pool.orderBy(*full_order).limit(budget)
-    mn, mx = float(st[f"mn_{cut_col}"]), float(st[f"mx_{cut_col}"])
-    width = (mx - mn) / n_buckets or 1.0
-    bucket = F.least(
-        F.floor((F.col(cut_col) - F.lit(mn)) / F.lit(width)).cast("int"),
-        F.lit(n_buckets - 1),
-    )
     hist = {
         int(r["b"]): int(r["c"])
         for r in pool.select(bucket.alias("b")).groupBy("b").agg(

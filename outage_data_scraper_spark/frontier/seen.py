@@ -1,4 +1,4 @@
-"""Distributed URL-seen set: exact anti-join + Bloom-filter fast path.
+"""Distributed URL-seen set: exact anti-join + membership-sketch fast path.
 
 The reference's only dedupe is a per-run `visited` list guarding repeated
 XHR captures (il_scraper.py:200–204; ny_scraper.py:203,211–212). The
@@ -6,21 +6,25 @@ engine generalizes it (north rule):
 
 - **Exact path** — left-anti join against the `seen` table. Used at test
   scale and for the parity invariant (identical final seen-set).
-- **Bloom path** — per-partition Bloom bitsets built from JVM-precomputed
-  xxhash64 columns (so Python never hashes strings row-at-a-time), merged
-  via ``RDD.treeAggregate`` (the engine's single RDD touchpoint), then
-  broadcast and probed inside a vectorized ``mapInPandas``. False
-  positives only *suppress* re-fetches — exactly the `visited` semantics —
-  never invent URLs, so the Bloom path is safe at 10^10 scale with an
-  ε·|frontier| re-fetch-suppression budget.
+- **Sketch path** — a Bloom bitset or a (deletable) cuckoo table. Any
+  sketch with ``add_hashes``/``contains_hashes``/``merge`` shares ONE
+  build and ONE probe: per-partition sketches built from JVM-precomputed
+  xxhash64 columns (so Python never hashes strings row-at-a-time) in one
+  ``mapInPandas``, merged via ``RDD.treeAggregate`` (the engine's single
+  RDD touchpoint) in ``_sketch_from_df``; then broadcast and probed
+  inside one vectorized ``mapInPandas`` in ``filter_unseen_sketch``.
+  False positives only *suppress* re-fetches — exactly the `visited`
+  semantics — never invent URLs, so the sketch path is safe at 10^10
+  scale with an ε·|frontier| re-fetch-suppression budget.
 
-Both paths share the filter_unseen_* signature so callers flip with one
-config knob.
+Both paths share the ``filter_unseen_*(candidates, seen, url_col)``
+signature so callers flip with one config knob.
 """
 
 from __future__ import annotations
 
 import math
+import pickle
 from collections.abc import Iterator
 
 import numpy as np
@@ -53,6 +57,10 @@ class BloomFilter:
 
     @classmethod
     def sized(cls, expected_n: int, fpp: float = 1e-3) -> "BloomFilter":
+        # fpp >= 1 would size a saturating 64-bit k=1 filter that reports
+        # every URL as seen; fpp <= 0 has no finite size
+        if not 0 < fpp < 1:
+            raise ValueError(f"Bloom fpp must be in (0, 1), got {fpp!r}")
         n = max(expected_n, 1)
         m = int(-n * math.log(fpp) / (math.log(2) ** 2))
         m = max(64, (m + 63) // 64 * 64)
@@ -88,46 +96,50 @@ class BloomFilter:
         return cls(m, k, np.frombuffer(raw, dtype=np.uint8).copy())
 
 
-def bloom_from_df(
-    df: DataFrame, url_col: str = "url", expected_n: int | None = None, fpp: float = 1e-3
-) -> BloomFilter:
-    """Build one merged Bloom filter over df[url_col].
-
-    Per-partition bitsets are built with numpy from Arrow batches
-    (mapInPandas → one bitset row per partition), then OR-merged with
-    ``treeAggregate(depth=2)`` so the driver never receives more than
-    sqrt(P) bitsets at once.
-    """
-    n = expected_n if expected_n is not None else df.count()
-    proto = BloomFilter.sized(n, fpp)
-    m, k = proto.m, proto.k
-
+def _sketch_from_df(df: DataFrame, new, url_col: str = "url"):
+    """Build one merged sketch over df[url_col]. ``new()`` makes an empty
+    sketch; each partition adds its Arrow batches' hashes to one sketch
+    (one pickled sketch per partition), then the sketches merge in a
+    depth-2 tree so the driver never receives more than sqrt(P) of them
+    at once. Pickle exists only in flight between tasks and the driver."""
+    zero = new()
     hashed = _with_hash_cols(df, url_col).select(_H1, _H2)
-    # each partition emits ONE full-m bitset; a large-n bloom over many
-    # partitions would push partitions × m/8 bytes through the merge
-    # (a 38 MB bitset × 256 parts = 9.7 GB of byte[] rows — measured
-    # JVM OOM at the 4M-URL soak). Cap in-flight bitset bytes at
-    # ~512 MB by coalescing (narrow, no shuffle) — hashing loses some
-    # parallelism only when bitsets are huge, exactly when the merge
+    # each partition emits ONE full-size sketch; a large-n sketch over
+    # many partitions would push partitions × sketch bytes through the
+    # merge (a 38 MB bitset × 256 parts = 9.7 GB of byte[] rows —
+    # measured JVM OOM at the 4M-URL soak). Cap in-flight sketch bytes
+    # at ~512 MB by coalescing (narrow, no shuffle) — hashing loses some
+    # parallelism only when sketches are huge, exactly when the merge
     # would otherwise dominate. The 10^10-scale form is sharded blooms
     # (SCALE.md §Bloom): shard by url hash, each shard m/256 bits.
-    bitset_bytes = (m + 7) // 8
-    max_parts = max(8, (512 << 20) // max(bitset_bytes, 1))
+    max_parts = max(8, (512 << 20) // len(zero.to_bytes()))
     if hashed.rdd.getNumPartitions() > max_parts:
         hashed = hashed.coalesce(int(max_parts))
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter(m, k)
+        sketch = new()
         for b in batches:
-            bf.add_hashes(b[_H1].to_numpy(np.int64), b[_H2].to_numpy(np.int64))
-        yield pd.DataFrame({"bitset": [bf.to_bytes()]})
+            sketch.add_hashes(b[_H1].to_numpy(np.int64), b[_H2].to_numpy(np.int64))
+        yield pd.DataFrame({"sketch": [pickle.dumps(sketch)]})
 
-    shard_rdd = hashed.mapInPandas(build, "bitset binary").rdd.map(
-        lambda row: np.frombuffer(row.bitset, dtype=np.uint8)
+    def merge(a, b):
+        return a.merge(b)
+
+    shards = hashed.mapInPandas(build, "sketch binary").rdd.map(
+        lambda row: pickle.loads(row.sketch)
     )
-    zero = np.zeros((m + 7) // 8, dtype=np.uint8)
-    merged = shard_rdd.treeAggregate(zero, np.bitwise_or, np.bitwise_or, depth=2)
-    return BloomFilter(m, k, merged)
+    return shards.treeAggregate(zero, merge, merge, depth=2)
+
+
+def bloom_from_df(
+    df: DataFrame, url_col: str = "url", expected_n: int | None = None, fpp: float = 1e-3
+) -> BloomFilter:
+    """One merged Bloom filter over df[url_col], sized for ``expected_n``
+    URLs (default: df.count()) at false-positive rate ``fpp``."""
+    n = expected_n if expected_n is not None else df.count()
+    proto = BloomFilter.sized(n, fpp)
+    m, k = proto.m, proto.k  # the closure ships (m, k), not the bitset
+    return _sketch_from_df(df, lambda: BloomFilter(m, k), url_col)
 
 
 class CuckooFilter:
@@ -255,55 +267,12 @@ class CuckooFilter:
 def cuckoo_from_df(
     df: DataFrame, url_col: str = "url", expected_n: int | None = None
 ) -> CuckooFilter:
-    """Build one merged cuckoo filter over df[url_col]: per-partition
-    tables from Arrow batches, merged by fingerprint reinsertion via
-    treeAggregate (same shape as bloom_from_df)."""
+    """One merged cuckoo filter over df[url_col], sized for
+    ``expected_n`` URLs (default: df.count()); per-partition tables merge
+    by fingerprint reinsertion."""
     n = expected_n if expected_n is not None else df.count()
-    proto = CuckooFilter.sized(n)
-    m = proto.m
-
-    hashed = _with_hash_cols(df, url_col).select(_H1, _H2)
-    # same in-flight-bytes cap as bloom_from_df (tables are m·SLOTS·2 B)
-    table_bytes = m * CuckooFilter.SLOTS * 2
-    max_parts = max(8, (512 << 20) // max(table_bytes, 1))
-    if hashed.rdd.getNumPartitions() > max_parts:
-        hashed = hashed.coalesce(int(max_parts))
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cf = CuckooFilter(m)
-        for b in batches:
-            cf.add_hashes(b[_H1].to_numpy(np.int64), b[_H2].to_numpy(np.int64))
-        yield pd.DataFrame({"table": [cf.to_bytes()]})
-
-    shard_rdd = hashed.mapInPandas(build, "table binary").rdd.map(
-        lambda row: CuckooFilter.from_bytes(m, bytes(row.table))
-    )
-    zero = CuckooFilter(m)
-    return shard_rdd.treeAggregate(
-        zero, lambda a, b_: a.merge(b_), lambda a, b_: a.merge(b_), depth=2
-    )
-
-
-def filter_unseen_cuckoo(
-    candidates: DataFrame, cuckoo: CuckooFilter, url_col: str = "url"
-) -> DataFrame:
-    """Cuckoo path: broadcast the fingerprint table, probe vectorized.
-    Identical contract to filter_unseen_bloom, plus deletability."""
-    spark = candidates.sparkSession
-    b = spark.sparkContext.broadcast((cuckoo.m, cuckoo.to_bytes()))
-    hashed = _with_hash_cols(candidates, url_col)
-    schema = hashed.schema
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, raw = b.value
-        cf = CuckooFilter.from_bytes(m, raw)
-        for batch in batches:
-            hit = cf.contains_hashes(
-                batch[_H1].to_numpy(np.int64), batch[_H2].to_numpy(np.int64)
-            )
-            yield batch[~hit]
-
-    return hashed.mapInPandas(probe, schema).drop(_H1, _H2)
+    m = CuckooFilter.sized(n).m
+    return _sketch_from_df(df, lambda: CuckooFilter(m), url_col)
 
 
 def unsee_urls(cuckoo: CuckooFilter, df: DataFrame, url_col: str = "url") -> int:
@@ -328,20 +297,18 @@ def filter_unseen_exact(candidates: DataFrame, seen: DataFrame, url_col: str = "
     )
 
 
-def filter_unseen_bloom(candidates: DataFrame, bloom: BloomFilter, url_col: str = "url") -> DataFrame:
-    """Bloom path: broadcast the merged bitset, probe vectorized."""
-    spark = candidates.sparkSession
-    b = spark.sparkContext.broadcast((bloom.m, bloom.k, bloom.to_bytes()))
+def filter_unseen_sketch(candidates: DataFrame, sketch, url_col: str = "url") -> DataFrame:
+    """Sketch path: broadcast the merged sketch (Bloom or cuckoo), drop
+    the candidates it contains in one vectorized mapInPandas probe."""
+    b = candidates.sparkSession.sparkContext.broadcast(sketch)
     hashed = _with_hash_cols(candidates, url_col)
-    schema = hashed.schema
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, k, raw = b.value
-        bf = BloomFilter.from_bytes(m, k, raw)
+        sk = b.value
         for batch in batches:
-            hit = bf.contains_hashes(
+            hit = sk.contains_hashes(
                 batch[_H1].to_numpy(np.int64), batch[_H2].to_numpy(np.int64)
             )
             yield batch[~hit]
 
-    return hashed.mapInPandas(probe, schema).drop(_H1, _H2)
+    return hashed.mapInPandas(probe, hashed.schema).drop(_H1, _H2)

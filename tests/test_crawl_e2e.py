@@ -198,6 +198,23 @@ def test_unknown_seen_mode_rejected(spark, tmp_path):
                 seen_mode="Exact")
 
 
+@pytest.mark.parametrize("fpp", [1.5, 1.0, 0.0])
+def test_bloom_fpp_outside_unit_interval_rejected(spark, tmp_path, fpp):
+    """fpp >= 1 sizes a saturating filter that suppresses every child as
+    seen; fpp = 0 has no finite size. Both must fail at construction."""
+    with pytest.raises(ValueError, match="fpp"):
+        Crawler(spark, SnapshotCatalog(str(tmp_path)), make_fixture_fetcher,
+                seen_mode="bloom", bloom_fpp=fpp)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_per_host_k_below_one_rejected(spark, tmp_path, k):
+    """A zero-row pop reads as a finished crawl: run() would return []."""
+    with pytest.raises(ValueError, match="per_host_k"):
+        Crawler(spark, SnapshotCatalog(str(tmp_path)), make_fixture_fetcher,
+                per_host_k=k)
+
+
 def test_bloom_seen_mode_crawl(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("crawl-bloom"))
     cat = SnapshotCatalog(root)
@@ -221,13 +238,62 @@ def test_bloom_state_persists_across_waves(spark, tmp_path_factory):
     assert cat.exists("seen_bloom")
     c.run(max_waves=30)
     # bloom contains every fetched URL: probing it suppresses all of them
-    from outage_data_scraper_spark.frontier.seen import filter_unseen_bloom
+    from outage_data_scraper_spark.frontier.seen import filter_unseen_sketch
     bloom = c._bloom_load()
     fetched = c.fetch_log().select("url").distinct()
-    assert filter_unseen_bloom(fetched, bloom).count() == 0
+    assert filter_unseen_sketch(fetched, bloom).count() == 0
     # crawl result unchanged vs reference order
     urls = {r.url for r in fetched.collect()}
     assert urls == set(reference_order(spark))
+
+
+def test_bloom_crawl_reads_seen_bloom_once_per_wave(spark, tmp_path_factory, monkeypatch):
+    """The child chain probes with the bitset it loads and ORs the wave's
+    new URLs into that same bitset: one seen_bloom read per wave, also on
+    waves that find children."""
+    reads = []
+    orig_read = SnapshotCatalog.read
+
+    def read(self, spark_, name, *a, **kw):
+        if name == "seen_bloom":
+            reads.append(name)
+        return orig_read(self, spark_, name, *a, **kw)
+
+    monkeypatch.setattr(SnapshotCatalog, "read", read)
+    root = str(tmp_path_factory.mktemp("crawl-bloomreads"))
+    c = Crawler(spark, SnapshotCatalog(root), make_fixture_fetcher, per_host_k=4,
+                num_parts=8, rate_per_host=100.0, seen_mode="bloom")
+    c.bootstrap(fixture_miniweb_seeds(spark))
+    per_wave = []
+    wave = 1
+    while (ws := c.run_wave(wave)) is not None:
+        per_wave.append((ws.children, len(reads)))
+        reads.clear()
+        wave += 1
+    assert any(children for children, _ in per_wave), per_wave
+    assert [n for _, n in per_wave] == [1] * len(per_wave), per_wave
+
+
+def test_budget_cuts_reject_null_law_column(spark):
+    """The histogram cuts equal the sorted law only over non-null law
+    columns: a NULL priority must raise, not silently drop its row."""
+    from outage_data_scraper_spark.frontier.priority import pop_wave
+
+    fr = spark.createDataFrame(
+        [
+            (f"http://h{i}.x.net/{i}", f"h{i}.x.net", 0, None if i == 3 else float(i),
+             0, i, 0, 0, None, None, None, None, "pending", 0)
+            for i in range(6)
+        ],
+        "url string, host string, salted_part int, priority double, "
+        "depth int, event_seq int, seed_seq int, child_seq int, "
+        "state string, layout string, emc string, family string, "
+        "status string, wave int",
+    )
+    with pytest.raises(ValueError, match="NULLs in order column.*priority"):
+        pop_wave(fr, per_host_k=2, num_parts=4, wave_budget=2).collect()
+    with pytest.raises(ValueError, match="NULLs in order column.*priority"):
+        pop_wave(fr, per_host_k=2, num_parts=4, domain_budget=2).collect()
 
 
 def test_failed_concurrent_commit_aborts_wave_and_resumes_clean(

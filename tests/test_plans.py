@@ -247,6 +247,29 @@ def test_frontier_pop_top_k_combined_map_side(spark):
     assert any(t.startswith("WindowGroupLimit") and t.endswith("4, Final") for t in above)
 
 
+def test_child_first_discovery_top1_combined_map_side(spark):
+    """child_chain's first-discovery `rn == 1` cut plans a WindowGroupLimit
+    whose Partial half keeps each map task's top-1 per child URL below the
+    child_url hash exchange and whose Final half sits above it."""
+    from outage_data_scraper_spark.frontier.crawler import first_discoveries
+    from outage_data_scraper_spark.parsers.parse import PARSE_OUT_SCHEMA
+
+    rows = [
+        (f"https://p/{i}", "p", "ga", "1", "e", "ga1", 0, i, i % 3, 0, 1, 0, 0,
+         "child", None, None, None, f"https://c/{i % 5}", i % 2, 200, None)
+        for i in range(40)
+    ]
+    parsed = spark.createDataFrame(rows, PARSE_OUT_SCHEMA).repartition(4)
+    children = first_discoveries(parsed, wave=1)
+    nodes = _plan_nodes(children._jdf.queryExecution().executedPlan().toString())
+    xs = [i for i, (_, t) in enumerate(nodes) if t.startswith("Exchange hashpartitioning(child_url")]
+    assert len(xs) == 1, [t for _, t in nodes]
+    below = _subtree(nodes, xs[0])
+    above = [t for _, t in nodes[: xs[0]]]
+    assert any(t.startswith("WindowGroupLimit") and t.endswith("1, Partial") for t in below)
+    assert any(t.startswith("WindowGroupLimit") and t.endswith("1, Final") for t in above)
+
+
 def test_records_partition_pruning(spark, tmp_path):
     """records snapshots are hive-partitioned by (state, layout); a state
     filter must appear as a PartitionFilter, not a data filter."""

@@ -6,10 +6,14 @@ exact path drops — false positives only suppress re-fetches, matching the
 reference's `visited` semantics (il_scraper.py:200–204).
 """
 
+import numpy as np
+import pytest
+
 from outage_data_scraper_spark.frontier.seen import (
+    BloomFilter,
     bloom_from_df,
-    filter_unseen_bloom,
     filter_unseen_exact,
+    filter_unseen_sketch,
 )
 
 
@@ -31,7 +35,7 @@ def test_bloom_no_false_negatives_and_subset_of_exact(spark):
     cand = _urls(spark, cand_urls)
 
     bloom = bloom_from_df(seen, fpp=1e-3)
-    kept_bloom = {r.url for r in filter_unseen_bloom(cand, bloom).collect()}
+    kept_bloom = {r.url for r in filter_unseen_sketch(cand, bloom).collect()}
     kept_exact = {r.url for r in filter_unseen_exact(cand, seen).collect()}
 
     # no false negatives: every seen URL is suppressed
@@ -48,23 +52,44 @@ def test_bloom_schema_preserved(spark):
         [("https://a/1", 1), ("https://b/2", 2)], "url string, k int"
     )
     bloom = bloom_from_df(seen)
-    out = filter_unseen_bloom(cand, bloom)
+    out = filter_unseen_sketch(cand, bloom)
     assert out.columns == ["url", "k"]
     assert [r.k for r in out.collect()] == [2]
 
 
-def test_cuckoo_no_false_negatives_and_subset_of_exact(spark):
-    from outage_data_scraper_spark.frontier.seen import (
-        cuckoo_from_df,
-        filter_unseen_cuckoo,
+def test_bloom_from_df_equals_driver_side_build(spark):
+    """OR is order-free: the per-partition build + tree merge must give
+    the bitset a driver-side add over the same hashes gives."""
+    from outage_data_scraper_spark.frontier.seen import _H1, _H2, _with_hash_cols
+
+    df = _urls(spark, [f"https://t.example/{i}" for i in range(3000)]).repartition(7)
+    assert df.rdd.getNumPartitions() > 1
+    built = bloom_from_df(df, expected_n=3000, fpp=1e-3)
+    rows = _with_hash_cols(df).select(_H1, _H2).collect()
+    twin = BloomFilter.sized(3000, 1e-3)
+    twin.add_hashes(
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([r[1] for r in rows], dtype=np.int64),
     )
+    assert (built.m, built.k) == (twin.m, twin.k)
+    assert built.to_bytes() == twin.to_bytes()
+
+
+@pytest.mark.parametrize("fpp", [1.5, 1.0, 0.0, -0.1])
+def test_bloom_sized_rejects_fpp_outside_unit_interval(fpp):
+    with pytest.raises(ValueError, match="fpp"):
+        BloomFilter.sized(1000, fpp)
+
+
+def test_cuckoo_no_false_negatives_and_subset_of_exact(spark):
+    from outage_data_scraper_spark.frontier.seen import cuckoo_from_df
 
     seen_urls = [f"https://seen.example/{i}" for i in range(2000)]
     cand_urls = seen_urls[:500] + [f"https://new.example/{i}" for i in range(2000)]
     seen = _urls(spark, seen_urls)
     cand = _urls(spark, cand_urls)
     cf = cuckoo_from_df(seen)
-    kept = {r.url for r in filter_unseen_cuckoo(cand, cf).collect()}
+    kept = {r.url for r in filter_unseen_sketch(cand, cf).collect()}
     exact = {r.url for r in filter_unseen_exact(cand, seen).collect()}
     # zero false negatives: every seen URL suppressed
     assert not (kept & set(seen_urls))
@@ -79,7 +104,6 @@ def test_cuckoo_delete_enables_recrawl(spark):
     re-crawl fetch them again — impossible with a Bloom bitset."""
     from outage_data_scraper_spark.frontier.seen import (
         cuckoo_from_df,
-        filter_unseen_cuckoo,
         unsee_urls,
     )
 
@@ -87,7 +111,7 @@ def test_cuckoo_delete_enables_recrawl(spark):
     cf = cuckoo_from_df(_urls(spark, urls))
     recrawl = urls[:40]
     assert unsee_urls(cf, _urls(spark, recrawl)) == 40
-    kept = {r.url for r in filter_unseen_cuckoo(_urls(spark, urls), cf).collect()}
+    kept = {r.url for r in filter_unseen_sketch(_urls(spark, urls), cf).collect()}
     assert set(recrawl) <= kept            # re-crawl list passes again
     assert len(kept) <= len(recrawl) + 1   # everything else still suppressed
 
