@@ -16,10 +16,12 @@ Layout per table::
         snap=00000001/part-*.parquet
         snap=00000002/<partition>=<value>/part-*.parquet
 
-Commit protocol: data dir is fully written first, then the manifest is
-replaced via os.replace (atomic on POSIX). A reader only sees snapshots
-listed in the manifest, so a killed writer leaves at most an orphan data
-dir — never a torn table. That is the resumability contract the crawl
+Commit protocol: data dir is fully written first — by a Spark job for a
+DataFrame, or on the driver as one ``part-00000.parquet`` for a
+``pyarrow.Table`` (the crawler's one-row bookkeeping snapshots) — then
+the manifest is replaced via os.replace (atomic on POSIX). A reader only
+sees snapshots listed in the manifest, so a killed writer leaves at most
+an orphan data dir — never a torn table. That is the resumability contract the crawl
 wave loop relies on (SURVEY.md §4.3 "Resumable crawl state").
 """
 
@@ -31,6 +33,8 @@ import shutil
 import threading
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -98,12 +102,18 @@ class SnapshotCatalog:
     def write(
         self,
         name: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         mode: str = "append",
         wave: int | None = None,
         partition_by: list[str] | None = None,
     ) -> int:
         """Append or overwrite; returns the new snapshot id.
+
+        The snapshot's data dir is fully written before the manifest
+        swap: by a Spark job for a DataFrame, or on the driver as one
+        parquet file for a ``pyarrow.Table`` (no Spark job, no Python
+        task: the crawl's one-row wave marker and Bloom bitset). A table
+        cannot be partitioned.
 
         ``wave`` stamps crawl-wave lineage on the snapshot so resume can
         find the last consistent wave across tables. ``partition_by``
@@ -115,6 +125,8 @@ class SnapshotCatalog:
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
+        if partition_by and isinstance(df, pa.Table):
+            raise ValueError(f"table {name!r}: a pyarrow.Table snapshot cannot be partitioned")
         # dict.setdefault is atomic under the GIL (defaultdict's
         # __missing__ is not), so two racing first-writers get ONE lock
         with self._locks.setdefault(name, threading.Lock()):
@@ -128,10 +140,18 @@ class SnapshotCatalog:
                 )
             snap_id = (manifest["snapshots"][-1]["id"] + 1) if manifest["snapshots"] else 1
             snap_dir = f"snap={snap_id:08d}"
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(os.path.join(self._table_dir(name), snap_dir))
+            path = os.path.join(self._table_dir(name), snap_dir)
+            if isinstance(df, pa.Table):
+                # a killed writer may have left an orphan dir here; clear
+                # it as Spark's overwrite mode does
+                shutil.rmtree(path, ignore_errors=True)
+                os.makedirs(path)
+                pq.write_table(df, os.path.join(path, "part-00000.parquet"))
+            else:
+                writer = df.write.mode("overwrite")
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                writer.parquet(path)
             manifest["snapshots"].append(
                 {
                     "id": snap_id,

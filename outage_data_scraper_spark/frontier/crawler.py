@@ -12,7 +12,7 @@ Replaces the reference's sequential handler loop (app/main.py:13–64) with:
         append records / pages-text / fetch_log
         children = discovered URLs, deduped against everything enqueued
                    (exact anti-join or Bloom fast path) → append to frontier
-        commit wave marker
+        commit wave marker (one driver-written parquet row: no Spark job)
 
 State design: the frontier is an *append-only enqueue log*; "pending" is
 derived (frontier ANTI fetch_log), so no table is ever rewritten in place
@@ -32,10 +32,13 @@ termination test, not a separate emptiness probe.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .. import schemas
 from ..functions import urlkit
@@ -50,10 +53,11 @@ from .priority import pop_wave, seeds_to_frontier
 from .seen import BloomFilter, bloom_from_df, filter_unseen_exact
 from .seen import filter_unseen_sketch as filter_unseen_bloom
 
-WAVES_SCHEMA = (
-    "wave int, popped long, ok long, failed long, records long, "
-    "children long, wall_s double"
-)
+
+def _row(schema: StructType, **row) -> pa.Table:
+    """One bookkeeping row as a pyarrow.Table, which SnapshotCatalog.write
+    commits from the driver: no Spark job, no Python task."""
+    return pa.Table.from_pylist([row], schema=to_arrow_schema(schema))
 
 
 def first_discoveries(parsed: DataFrame, wave: int) -> DataFrame:
@@ -113,9 +117,17 @@ class Crawler:
         wave_budget: int | None = None,
         domain_budget: int | None = None,
     ):
-        if per_host_k < 1:
-            # a zero-row pop reads as "crawl done": run() would return []
-            raise ValueError(f"per_host_k must be >= 1, got {per_host_k!r}")
+        # each would otherwise fail inside wave 1 (pmod by zero, a
+        # zero-partition repartition, a zero-rate pacer) or silently: a
+        # zero-row pop reads as "crawl done" (run() returns []), and a
+        # zero host budget goes unenforced
+        for knob, v in (("per_host_k", per_host_k), ("num_parts", num_parts),
+                        ("salt", salt), ("host_budget", host_budget),
+                        ("wave_budget", wave_budget), ("domain_budget", domain_budget)):
+            if v is not None and v < 1:
+                raise ValueError(f"{knob} must be >= 1, got {v!r}")
+        if not rate_per_host > 0:
+            raise ValueError(f"rate_per_host must be > 0, got {rate_per_host!r}")
         self.spark = spark
         self.cat = catalog
         self.fetcher_factory = fetcher_factory
@@ -150,7 +162,8 @@ class Crawler:
 
     # -- persistent Bloom seen-set --------------------------------------------
     # The Bloom filter is incrementally maintained in the seen_bloom table
-    # (one merged bitset row, overwritten and wave-stamped each wave): each
+    # (one merged bitset row, overwritten and wave-stamped each wave, and
+    # written from the driver as one parquet file): each
     # wave ORs in only the NEWLY enqueued URLs instead of rebuilding from
     # the full frontier — at 10^10-URL scale a rebuild would be a
     # full-table scan per wave.
@@ -170,10 +183,8 @@ class Crawler:
             urls, expected_n=self.BLOOM_EXPECTED_N, fpp=self.BLOOM_FPP
         )
         merged = fresh if base is None else base.merge(fresh)
-        row = self.spark.createDataFrame(
-            [(wave, merged.m, merged.k, merged.to_bytes())],
-            "wave int, m long, k int, bitset binary",
-        )
+        row = _row(schemas.SEEN_BLOOM, wave=wave, m=merged.m, k=merged.k,
+                   bitset=merged.to_bytes())
         self.cat.write("seen_bloom", row, mode="overwrite", wave=wave)
         return merged
 
@@ -442,13 +453,12 @@ class Crawler:
                 fut.result()  # propagate the first failure, wave aborts
             n_children = child_fut.result()
 
-        n_popped = ok + failed
-        wall = time.monotonic() - t0
-        marker = self.spark.createDataFrame(
-            [(wave, n_popped, ok, failed, n_records, n_children, wall)], WAVES_SCHEMA
+        stats = WaveStats(
+            wave, ok + failed, ok, failed, n_records, n_children, time.monotonic() - t0
         )
-        self.cat.write("waves", marker, wave=wave)  # the wave commit point
-        return WaveStats(wave, n_popped, ok, failed, n_records, n_children, wall)
+        # the wave commit point: one driver-written row, no Spark job
+        self.cat.write("waves", _row(schemas.WAVES, **asdict(stats)), wave=wave)
+        return stats
 
     def compact(self) -> None:
         """Long-crawl maintenance: rewrite every table's live state as one

@@ -78,8 +78,8 @@ FRONTIER = StructType(
     ]
 )
 
-# Exact URL-seen set (anti-join path). The Bloom path stores shards in
-# SEEN_BLOOM; both satisfy the `visited` semantics of
+# Exact URL-seen set (anti-join path). The Bloom path stores its bitset
+# in SEEN_BLOOM; both satisfy the `visited` semantics of
 # il_scraper.py:200–204 (false positives only suppress re-fetches).
 SEEN = StructType(
     [
@@ -90,11 +90,28 @@ SEEN = StructType(
     ]
 )
 
+# The crawler's persistent Bloom seen-set: one merged bitset row,
+# overwritten and wave-stamped each wave (frontier/crawler.py).
 SEEN_BLOOM = StructType(
     [
-        StructField("partition_id", IntegerType(), False),
+        StructField("wave", IntegerType(), False),
+        StructField("m", LongType(), False),
+        StructField("k", IntegerType(), False),
         StructField("bitset", BinaryType(), False),
-        StructField("n", LongType(), False),
+    ]
+)
+
+# One wave-marker row per committed crawl wave: its append is the wave's
+# commit point (frontier/crawler.py). Columns match WaveStats.
+WAVES = StructType(
+    [
+        StructField("wave", IntegerType(), False),
+        StructField("popped", LongType(), False),
+        StructField("ok", LongType(), False),
+        StructField("failed", LongType(), False),
+        StructField("records", LongType(), False),
+        StructField("children", LongType(), False),
+        StructField("wall_s", DoubleType(), False),
     ]
 )
 

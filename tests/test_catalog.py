@@ -137,3 +137,118 @@ def test_overwrite_may_change_partition_spec(spark, tmp_catalog_dir):
     assert sorted((r.x, r.p) for r in cat.read(spark, "t").collect()) == [(2, "b"), (3, "c")]
     # time travel to before the overwrite still reads the old layout
     assert [(r.x, r.p) for r in cat.read(spark, "t", snapshot=1).collect()] == [(1, "a")]
+
+
+# -- driver-written snapshots (pyarrow.Table) ----------------------------------
+
+
+def _tbl(vals):
+    import pyarrow as pa
+
+    return pa.table({"x": pa.array(vals, pa.int32())})
+
+
+def test_arrow_table_write_launches_no_spark_job(spark, tmp_catalog_dir):
+    """A pyarrow.Table snapshot is one parquet file written on the driver:
+    no Spark job runs between the write call and its manifest commit."""
+    import os
+
+    cat = SnapshotCatalog(tmp_catalog_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("arrow-write", "arrow-write")
+    try:
+        s1 = cat.write("t", _tbl([1, 2]), wave=1)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("arrow-write") == []
+    snap_dir = os.path.join(tmp_catalog_dir, "t", cat.snapshots("t")[0]["dir"])
+    assert os.listdir(snap_dir) == ["part-00000.parquet"]
+    assert cat.last_wave("t") == 1 and cat.current_snapshot_id("t") == s1
+    assert sorted(r.x for r in cat.read(spark, "t").collect()) == [1, 2]
+
+
+def test_bookkeeping_rows_read_with_spark_written_types(spark, tmp_catalog_dir):
+    """The crawler's driver-written waves and seen_bloom rows read back
+    with the types of the Spark-written rows they replace (a
+    createDataFrame over the same DDL), schemaless and under the table
+    schema alike."""
+    from outage_data_scraper_spark import schemas
+    from outage_data_scraper_spark.frontier.crawler import _row
+
+    cat = SnapshotCatalog(tmp_catalog_dir)
+    cases = {
+        "waves": (
+            schemas.WAVES,
+            "wave int, popped long, ok long, failed long, records long, "
+            "children long, wall_s double",
+            dict(wave=1, popped=3, ok=2, failed=1, records=5, children=4, wall_s=0.5),
+        ),
+        "seen_bloom": (
+            schemas.SEEN_BLOOM,
+            "wave int, m long, k int, bitset binary",
+            dict(wave=1, m=64, k=3, bitset=b"\x01" * 8),
+        ),
+    }
+    for name, (schema, ddl, row) in cases.items():
+        cat.write(name, _row(schema, **row), wave=1)
+        cat.write(f"{name}_spark", spark.createDataFrame([tuple(row.values())], ddl))
+        want = cat.read(spark, f"{name}_spark").schema.simpleString()
+        assert want == schema.simpleString(), name
+        assert cat.read(spark, name).schema.simpleString() == want, name
+        typed = cat.read(spark, name, schema=schema)
+        assert typed.schema.simpleString() == want, name
+        assert typed.first().asDict() == row
+
+
+def test_mixed_spark_and_driver_snapshots_read_as_one_scan(spark, tmp_catalog_dir):
+    """A live set that mixes Spark-written and driver-written snapshots
+    (e.g. waves after compact()) is still one scan, and time travel
+    returns exactly the rows of snapshots <= s."""
+    from pyspark.sql.types import StructType
+
+    from outage_data_scraper_spark.plans import count_nodes
+
+    cat = SnapshotCatalog(tmp_catalog_dir)
+    cat.write("t", _df(spark, [0]))
+    cat.write("t", _tbl([1]))
+    cat.write("t", _df(spark, [2]))
+    cat.write("t", _tbl([3]))
+    schema = StructType.fromDDL("x int")
+    for df in (cat.read(spark, "t"), cat.read(spark, "t", schema=schema)):
+        assert count_nodes(df, "Scan parquet") == 1
+        assert count_nodes(df, "Union") == 0
+        assert df.columns == ["x"]
+        assert sorted(r.x for r in df.collect()) == [0, 1, 2, 3]
+    for s in cat.snapshots("t"):
+        assert sorted(r.x for r in cat.read(spark, "t", snapshot=s["id"]).collect()) == list(
+            range(s["id"])
+        )
+
+
+@pytest.mark.parametrize("kind", ["dataframe", "table"])
+def test_orphan_snapshot_dir_is_replaced_not_merged(spark, tmp_catalog_dir, kind):
+    """A killed writer leaves an uncommitted snap=<next id> dir; the next
+    write replaces it, so the stray file never reaches a read."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    cat = SnapshotCatalog(tmp_catalog_dir)
+    cat.write("t", _tbl([1]))
+    orphan = os.path.join(tmp_catalog_dir, "t", "snap=00000002")
+    os.makedirs(orphan)
+    pq.write_table(_tbl([666]), os.path.join(orphan, "part-00007-stray.parquet"))
+    cat.write("t", _df(spark, [2]) if kind == "dataframe" else _tbl([2]))
+    assert cat.snapshots("t")[-1]["dir"] == "snap=00000002"
+    assert not os.path.exists(os.path.join(orphan, "part-00007-stray.parquet"))
+    assert sorted(r.x for r in cat.read(spark, "t").collect()) == [1, 2]
+
+
+def test_arrow_table_write_rejects_partition_by(spark, tmp_catalog_dir):
+    import os
+
+    cat = SnapshotCatalog(tmp_catalog_dir)
+    with pytest.raises(ValueError, match="'t'.*cannot be partitioned"):
+        cat.write("t", _tbl([1]), partition_by=["x"])
+    assert not cat.exists("t")
+    assert not os.path.exists(os.path.join(tmp_catalog_dir, "t"))

@@ -215,6 +215,52 @@ def test_per_host_k_below_one_rejected(spark, tmp_path, k):
                 per_host_k=k)
 
 
+@pytest.mark.parametrize(
+    "knob",
+    [
+        {"num_parts": 0}, {"salt": 0}, {"rate_per_host": 0.0}, {"rate_per_host": -1.0},
+        {"wave_budget": 0}, {"wave_budget": -3}, {"domain_budget": 0}, {"host_budget": 0},
+    ],
+    ids=lambda kw: "{}={}".format(*next(iter(kw.items()))),
+)
+def test_knob_out_of_range_rejected(spark, tmp_path, knob):
+    """Each of these otherwise fails inside wave 1, after bootstrap has
+    written the frontier (pmod by zero, a zero-partition repartition, a
+    zero-rate pacer), or silently: a zero wave/domain budget pops nothing
+    and reads as a finished crawl, a zero host budget is not enforced."""
+    name = next(iter(knob))
+    with pytest.raises(ValueError, match=name):
+        Crawler(spark, SnapshotCatalog(str(tmp_path)), make_fixture_fetcher, **knob)
+
+
+def test_wave_marker_commit_launches_no_spark_job(spark, tmp_path_factory):
+    """The wave marker is one driver-written row: committing it runs no
+    Spark job, so it adds nothing to the wave's serial tail."""
+    root = str(tmp_path_factory.mktemp("crawl-marker-jobs"))
+    cat = SnapshotCatalog(root)
+    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=4, num_parts=8,
+                rate_per_host=100.0)
+    c.bootstrap(fixture_miniweb_seeds(spark))
+    sc, marker_jobs = spark.sparkContext, []
+    real_write = cat.write
+
+    def write(name, df, **kw):
+        if name != "waves":
+            return real_write(name, df, **kw)
+        sc.setJobGroup("wave-marker", "wave-marker")
+        try:
+            return real_write(name, df, **kw)
+        finally:
+            sc.setJobGroup(None, None)
+            marker_jobs.append(sc.statusTracker().getJobIdsForGroup("wave-marker"))
+
+    cat.write = write
+    stats = c.run(max_waves=30)
+    assert stats and marker_jobs == [[]] * len(stats)
+    got = sorted(tuple(r) for r in cat.read(spark, "waves").drop("wall_s").collect())
+    assert got == [(s.wave, s.popped, s.ok, s.failed, s.records, s.children) for s in stats]
+
+
 def test_bloom_seen_mode_crawl(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("crawl-bloom"))
     cat = SnapshotCatalog(root)
