@@ -91,15 +91,22 @@ def test_read_is_one_scan_at_any_depth(spark, tmp_catalog_dir, n, partitioned):
     """n appended snapshots read as ONE parquet scan (no Union, whatever
     the depth), the snap=<id> partition level never leaks into the
     columns, and time travel returns exactly the rows of snapshots ≤ s.
-    Partition values like "007" stay strings under the table schema."""
+    Partition values like "007" stay strings under the table schema.
+    The 50-deep flat table is written from the driver as pyarrow.Tables
+    (no Spark job per row), which the one-scan read treats the same."""
+    import pyarrow as pa
     from pyspark.sql.types import StructType
 
     from outage_data_scraper_spark.plans import count_nodes
 
     cat = SnapshotCatalog(tmp_catalog_dir)
     pvals = ["01", "007", "7"]
+    driver_written = n == 50 and not partitioned
     for i in range(n):
-        df = spark.createDataFrame([(i, pvals[i % 3])], "x int, p string")
+        if driver_written:
+            df = pa.table({"x": pa.array([i], pa.int32()), "p": [pvals[i % 3]]})
+        else:
+            df = spark.createDataFrame([(i, pvals[i % 3])], "x int, p string")
         cat.write("t", df, partition_by=["p"] if partitioned else None)
     schema = StructType.fromDDL("x int, p string")
     for df in (cat.read(spark, "t"), cat.read(spark, "t", schema=schema)):
