@@ -552,9 +552,11 @@ def q47_near_dup_clusters(spark, sf_dir):
     list (q19's operating point), every document labeled with its
     cluster's canonical (minimum) doc_id; edge-less documents are their
     own singleton component. Spark side: iterative min-label propagation
-    (O(diameter) rounds, two hash shuffles each — large-star/small-star
-    is the drop-in at 10^10 edges); oracle: DuckDB recursive-CTE
-    transitive closure — value-exact."""
+    (O(diameter) rounds, two hash shuffles each; raises past 25 rounds
+    rather than return partial labels — these near-dup graphs are
+    short-diameter, and connected_components_star measured slower on
+    them); oracle: DuckDB recursive-CTE transitive closure —
+    value-exact."""
     from outage_data_scraper_spark.operators.sampling import hash_split  # noqa: F401 (registered together)
 
     docs = _t(spark, sf_dir, "documents")
@@ -842,15 +844,15 @@ def q67_compression_signal(spark, sf_dir):
 
 
 def q68_bpe_train(spark, sf_dir):
-    """Distributed BPE merge training (operators/bpe.py): ONE
-    corpus-sized word-frequency shuffle, then 30 merge iterations over
-    the vocabulary table only (the scale shape that makes tokenizer
-    training feasible at 100 TB — merge cost is O(vocabulary), never
-    O(corpus)); pair argmax with deterministic (freq DESC, left, right)
-    tiebreak, left-to-right non-overlapping merge as a pure F.aggregate
-    fold, per-round localCheckpoint. Iterative argmax is not ANSI SQL,
-    so the oracle is a committed parquet stamped by train_bpe_py — the
-    exact Python twin — input-digest guarded
+    """BPE merge training (operators/bpe.py): ONE corpus-sized
+    word-frequency shuffle, then the vocabulary is collected to the
+    driver and the 30 merge iterations run there (the scale shape that
+    makes tokenizer training feasible at 100 TB — merge cost is
+    O(vocabulary), never O(corpus), and no Spark job per merge); pair
+    argmax with deterministic (freq DESC, left, right) tiebreak,
+    left-to-right non-overlapping merge. Iterative argmax is not ANSI
+    SQL, so the oracle is a committed parquet stamped by train_bpe_py —
+    the exact Python twin — input-digest guarded
     (scripts/gen_q68_oracle.py)."""
     from outage_data_scraper_spark.operators import bpe
 
@@ -1363,7 +1365,9 @@ def q89_fingerprint_dedup_clusters(spark, sf_dir):
     """MOSS-style LOCAL dedup end-to-end — the fingerprint alternative
     to q20's MinHash banding: winnowing fingerprints (q85) → df-capped
     overlap pairs (q86's operating point) → connected components
-    (q47's min-label kernel) → canonical keep = cluster-minimum doc_id.
+    (q47's min-label kernel, which raises rather than return partial
+    labels past its 25-round cap) → canonical keep = cluster-minimum
+    doc_id.
     Every document is labeled; edge-less docs are their own singleton
     and kept. Oracle: q86's pair derivation feeding q47's
     recursive-CTE transitive closure."""

@@ -1,22 +1,23 @@
-"""Distributed BPE (byte-pair-encoding) merge training over a corpus.
+"""BPE (byte-pair-encoding) merge training over a corpus.
 
 Sennrich et al. 2016 trainer semantics, re-expressed for Spark's
 execution model: the corpus-sized work happens exactly ONCE (the
 word-frequency count — one shuffle at scan scale), and every merge
-iteration after that touches only the VOCABULARY table (distinct words
-+ freq), which is millions of rows at 100 TB corpus scale, not
+iteration after that touches only the VOCABULARY (distinct words +
+freq), which is millions of rows at 100 TB corpus scale, not
 trillions — the reason real tokenizer trainers are feasible at all.
-Per iteration: adjacent-symbol pairs explode out of the vocab table,
-one vocab-sized groupBy picks the most frequent pair (deterministic
-(freq DESC, left, right) tiebreak), and a pure-column fold rewrites the
-symbol arrays. The per-round ``localCheckpoint`` is the CLAUDE.md
-iterative-loop invariant (nested lineage blows up Catalyst analysis).
+That vocabulary is collected to the driver and the merge loop runs
+there: per iteration, every adjacent-symbol pair is counted (weighted
+by word freq), the most frequent pair wins with a deterministic
+(freq DESC, left, right) tiebreak, and each word's symbols are
+rewritten by a left-to-right non-overlapping scan. A Spark job per
+merge would pay the ~0.2 s scheduling floor N times for micro-seconds
+of O(vocab) work.
 
-Merging is a left-to-right non-overlapping scan, implemented as an
-``F.aggregate`` fold with a (out, prev) struct accumulator — pure JVM
-column algebra, no UDF. ``train_bpe_py`` is the exact driver-side twin
-(same tokenization, same tiebreak, same fold) used by the committed
-q68 oracle, since an iterative argmax loop is not ANSI SQL.
+``train_bpe_py`` is the exact driver-side twin (same tokenization, same
+loop) used by the committed q68 oracle. ``encode_words`` applies a
+merge list on the Spark side as an ``F.aggregate`` fold with a
+(out, prev) struct accumulator — pure JVM column algebra, no UDF.
 
 The reference repo has no tokenizer-training analog; this is part of
 the training-data-pipeline surface the task adds.
@@ -27,7 +28,7 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textkit
@@ -97,52 +98,6 @@ def _apply_merge(sym: Column, a: str, b: str) -> Column:
     return F.aggregate(sym, init, step, fin)
 
 
-def _adjacent_pairs(sym_col: str = "sym") -> Column:
-    """array<struct<a,b>> of adjacent symbol pairs (every occurrence
-    counts, so 'aaa' contributes (a,a) twice — trainer semantics).
-    size()-based slice lengths per the CLAUDE.md zip_with trap."""
-    n = F.size(sym_col)
-    return F.zip_with(
-        F.slice(sym_col, F.lit(1), n - 1),
-        F.slice(sym_col, F.lit(2), n - 1),
-        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-    )
-
-
-def train_bpe(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-) -> DataFrame:
-    """Learn ``n_merges`` BPE merges; returns the merge table
-    (step, left, right, merged, pair_freq) — the artifact a tokenizer
-    ships. Stops early if the vocabulary is fully merged."""
-    spark = docs.sparkSession
-    vocab = (
-        word_freq_table(docs, text_col)
-        .select("word", "freq", _symbols(F.col("word")).alias("sym"))
-        .localCheckpoint(eager=True)
-    )
-    merges: list[tuple[int, str, str, str, int]] = []
-    for step_i in range(n_merges):
-        best = (
-            vocab.select("freq", F.explode(_adjacent_pairs()).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("pf"))
-            .orderBy(F.desc("pf"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b, pf = best[0].a, best[0].b, int(best[0].pf)
-        merges.append((step_i, a, b, a + b, pf))
-        vocab = vocab.select(
-            "word", "freq", _apply_merge(F.col("sym"), a, b).alias("sym")
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(merges, MERGE_SCHEMA)
-
-
 def encode_words(
     words: DataFrame, merges: list[tuple[str, str]], word_col: str = "word"
 ) -> DataFrame:
@@ -161,28 +116,19 @@ def encode_words(
     return out
 
 
-def train_bpe_collected(
+def train_bpe(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
 ) -> DataFrame:
-    """Collected-vocab fast path: ONE corpus-sized Spark pass (the same
-    ``word_freq_table`` shuffle as ``train_bpe``), then the merge loop
-    runs DRIVER-SIDE over the collected (word, freq) table. Identical
-    output to ``train_bpe`` (pytest parity on seeded corpora).
+    """Learn ``n_merges`` BPE merges; returns the merge table
+    (step, left, right, merged, pair_freq) — the artifact a tokenizer
+    ships. Stops early if the vocabulary is fully merged.
 
-    Why this exists: the distributed loop pays one Spark job + one
-    driver collect per merge round (~0.2 s/job scheduling floor), so a
-    production 32k-merge tokenizer would spend hours on pure
-    scheduling. The word-freq table is already VOCAB-sized after the
-    single corpus shuffle — millions of rows at 100 TB corpus scale, a
-    driver-feasible collect — and each Python merge round is O(vocab
-    symbols), micro-seconds at demo scale. Use the distributed loop
-    only when the vocabulary itself cannot fit on the driver (which at
-    word granularity it essentially always can; byte-level BPE over
-    unsegmented text is the exception). scripts/bpe_crossover.py
-    measures the crossover (see BENCH.md).
-    """
+    ONE corpus-sized Spark pass (``word_freq_table``), then the merge
+    loop runs driver-side over the collected (word, freq) table: it is
+    vocabulary-sized after that shuffle (millions of rows at 100 TB
+    corpus scale), and each merge round is O(vocab symbols)."""
     spark = docs.sparkSession
     wf = {
         r.word: int(r.freq)
@@ -214,9 +160,8 @@ def train_bpe_py(
     texts: list[str | None], n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
     """Exact Python twin of train_bpe: same normalization (collapse
-    whitespace, strip, lower — textkit.normalized), same every-occurrence
-    pair counting, same (freq DESC, a, b) tiebreak (ASCII corpus: Python
-    code-point order == Spark UTF8 binary order), same fold."""
+    whitespace, strip, lower — textkit.normalized) and tokenization,
+    then the same merge loop."""
     wf: Counter[str] = Counter()
     for t in texts:
         if not t:
@@ -230,10 +175,10 @@ def train_bpe_py(
 def _merge_loop_py(
     wf: dict[str, int], n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
-    """The merge loop over a (word, freq) map — shared by the oracle
-    twin and the collected-vocab fast path. Same every-occurrence pair
-    counting and (freq DESC, a, b) tiebreak as the distributed loop
-    (Python code-point order == Spark UTF8 binary order: UTF-8 byte
+    """The merge loop over a (word, freq) map — shared by ``train_bpe``
+    and its oracle twin. Every occurrence of a pair counts ('aaa'
+    contributes (a, a) twice); ties break on (freq DESC, a, b) in
+    code-point order, which is Spark's UTF8 binary order (UTF-8 byte
     order is code-point-preserving)."""
     vocab: dict[str, list[str]] = {w: list(w) + [END_TOKEN] for w in wf}
     merges: list[tuple[int, str, str, str, int]] = []

@@ -371,13 +371,14 @@ def connected_components(
     typical. Each round is two hash shuffles (join + groupBy) on the
     SAME key — per-round cost is O(|edges|), and the one driver-side
     value per round is the changed-label count (a scalar, never rows).
-    At 10^10-edge scale swap the body for large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce"), which is the
-    same DataFrame shape with O(log n) round bound; the label contract
-    and this function's signature don't change.
+    For long-diameter graphs use connected_components_star
+    (large-star/small-star, O(log² n) rounds, the same (node, label)
+    contract).
 
     Returns (node, label). Nodes with no edges are absent — callers
-    treat missing as singleton (label = own id).
+    treat missing as singleton (label = own id). Raises RuntimeError if
+    labels still change after ``max_iter`` rounds (a diameter past the
+    cap), never returning partial labels.
     """
     bi = edges.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
@@ -413,6 +414,12 @@ def connected_components(
         labels = new
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after max_iter="
+            f"{max_iter} rounds (graph diameter exceeds the cap); use "
+            f"connected_components_star, whose rounds are O(log² n)"
+        )
     return labels
 
 
@@ -622,6 +629,8 @@ def connected_components_star(
     (count, xor-of-hashes) — two driver scalars per round, never rows).
     Result contract is identical to connected_components: (node, label)
     with label = the component's minimum id; parity-tested against it.
+    Raises RuntimeError if the edge set still changes after ``max_iter``
+    rounds.
     """
     e = (
         edges.select(
@@ -686,6 +695,11 @@ def connected_components_star(
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components_star: edge set still changing after "
+            f"max_iter={max_iter} rounds"
+        )
     # converged: stars (v, m). label(v) = its min neighbor; the root m
     # labels itself
     adj = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))

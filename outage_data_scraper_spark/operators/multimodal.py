@@ -645,28 +645,20 @@ RESIZED_SCHEMA = "asset_id long, payload binary, width int, height int"
 
 
 def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize of image payloads (PPM/PNG/JPEG,
-    pure numpy index selection), Arrow-batched. Non-image rows pass
-    through with a null payload — at scale this is the
-    normalize-before-encode stage."""
+    """REAL nearest-neighbor resize of every payload ``decode_image``
+    decodes (PPM/PNG/JPEG/GIF/VP8L-WebP, pure numpy index selection),
+    Arrow-batched. Non-image rows pass through with a null payload — at
+    scale this is the normalize-before-encode stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             payloads = []
             for payload in b["payload"]:
                 raw = bytes(payload) if payload is not None else b""
-                img = None
                 try:
-                    if raw[:2] == b"P6":
-                        img = decode_ppm(raw)
-                    elif raw[: len(_PNG_SIG)] == _PNG_SIG:
-                        img = decode_png(raw)
-                    elif raw[:2] == b"\xff\xd8":
-                        img = decode_jpeg(raw)
-                    elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                        img = decode_gif(raw)
+                    img = decode_image(raw)
                 except (ValueError, struct.error, NotImplementedError):
-                    img = None  # malformed payload → null row, not a task abort
+                    img = None  # non-image or malformed → null row, not a task abort
                 if img is not None:
                     h, w = img.shape[:2]
                     yi = (np.arange(height) * h // height).clip(0, h - 1)

@@ -43,20 +43,28 @@ def _lit_vec(v) -> Column:
     return F.array(*[F.lit(float(x)) for x in v])
 
 
+def _rerank_topk(
+    df: DataFrame, id_col: str, vec: Column, query: list[float], k: int, digits: int = 6
+) -> DataFrame:
+    """The exact re-rank every top-k search ends in: cosine to the query
+    as a literal array, rounded to ``digits``, ranked on the ROUNDED
+    score with an id tiebreak so both engines select identical rows (the
+    q50 rule)."""
+    q = _lit_vec(query)
+    return (
+        df.select(F.col(id_col), F.round(cosine(vec, q), digits).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     emb: DataFrame, query: list[float], k: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to ``query``."""
-    q = _lit_vec(query)
-    return (
-        emb.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    v = F.col(vec_col).cast("array<double>")
+    return _rerank_topk(emb, id_col, v, query, k)
 
 
 def make_hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
@@ -73,6 +81,16 @@ def lsh_bucket(vec_col: Column, planes: np.ndarray) -> Column:
     return sig
 
 
+def _lsh_probes(query: list[float], planes: np.ndarray, multiprobe: bool) -> list[int]:
+    """The query's signature bucket, plus its hamming-1 neighbors when
+    ``multiprobe`` (one flipped bit per plane)."""
+    qsig = 0
+    for i, p in enumerate(planes):
+        if float(np.dot(query, p)) > 0:
+            qsig |= 1 << i
+    return [qsig] + ([qsig ^ (1 << i) for i in range(len(planes))] if multiprobe else [])
+
+
 def ann_topk_lsh(
     emb: DataFrame, query: list[float], k: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -81,24 +99,12 @@ def ann_topk_lsh(
     """Approximate top-k: filter to the query's LSH bucket (± hamming-1
     probes), then exact rerank. At scale the bucket column is a partition
     key, so the probe is a partition-pruned scan, not a full pass."""
-    dim = len(query)
-    planes = make_hyperplanes(dim, n_planes, seed)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(query, p)) > 0:
-            qsig |= 1 << i
-    probes = [qsig] + ([qsig ^ (1 << i) for i in range(n_planes)] if multiprobe else [])
+    planes = make_hyperplanes(len(query), n_planes, seed)
+    probes = _lsh_probes(query, planes, multiprobe)
     v = F.col(vec_col).cast("array<double>")
     bucketed = emb.withColumn("__bucket", lsh_bucket(v, planes))
     cands = bucketed.filter(F.col("__bucket").isin(probes))
-    return (
-        cands.select(
-            F.col(id_col),
-            F.round(cosine(v, _lit_vec(query)), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(cands, id_col, v, query, k)
 
 
 # -- IVF: k-means coarse quantizer + probed search ----------------------------
@@ -160,6 +166,14 @@ def _nearest_centroid(v: Column, centroids: np.ndarray) -> Column:
     return F.array_min(cands).getField("i")
 
 
+def _ivf_probes(centroids: np.ndarray, query: list[float], n_probe: int) -> list[int]:
+    """Ids of the ``n_probe`` centroids nearest the query (squared L2),
+    nearest first."""
+    q = np.asarray(query, dtype=float)
+    order = np.argsort(((centroids - q) ** 2).sum(axis=1))
+    return [int(i) for i in order[:n_probe]]
+
+
 def ann_topk_ivf(
     emb: DataFrame, query: list[float], k: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -171,20 +185,11 @@ def ann_topk_ivf(
     pruned scans; recall is tuned by n_probe with brute force (cosine_
     topk) as the oracle."""
     centroids = kmeans_centroids(emb, n_centroids, iters, id_col, vec_col)
-    q = np.asarray(query, dtype=float)
-    order = np.argsort(((centroids - q) ** 2).sum(axis=1))
-    probes = [int(i) for i in order[:n_probe]]
+    probes = _ivf_probes(centroids, query, n_probe)
     v = F.col(vec_col).cast("array<double>")
     bucketed = emb.withColumn("__c", _nearest_centroid(v, centroids))
     cands = bucketed.filter(F.col("__c").isin(probes))
-    return (
-        cands.select(
-            F.col(id_col),
-            F.round(cosine(v, _lit_vec(query)), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(cands, id_col, v, query, k)
 
 
 # -- persisted ANN index: bucket column as PARTITION KEY ----------------------
@@ -250,23 +255,10 @@ def query_lsh_index(
     seed) — q45's oracle is q23's."""
     meta = _read_meta(path)
     planes = make_hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(query, p)) > 0:
-            qsig |= 1 << i
-    probes = [qsig] + (
-        [qsig ^ (1 << i) for i in range(meta["n_planes"])] if multiprobe else []
-    )
+    probes = _lsh_probes(query, planes, multiprobe)
     idx = spark.read.parquet(path).filter(F.col("bucket").isin(probes))
     v = F.col(vec_col).cast("array<double>")
-    return (
-        idx.select(
-            F.col(id_col),
-            F.round(cosine(v, _lit_vec(query)), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(idx, id_col, v, query, k)
 
 
 def build_ivf_index(
@@ -344,22 +336,12 @@ def query_ivf_sq8_index(
     meta = _read_meta(path)
     centroids = np.asarray(meta["centroids"], dtype=float)
     mns, scales = meta["mns"], meta["scales"]
-    q = np.asarray(query, dtype=float)
-    order = np.argsort(((centroids - q) ** 2).sum(axis=1))
-    probes = [int(i) for i in order[:n_probe]]
+    probes = _ivf_probes(centroids, query, n_probe)
     idx = spark.read.parquet(path).filter(F.col("ivf_cell").isin(probes))
-    qd = _lit_vec(_sq8_py(query, mns, scales))
     deq = idx.select(
         F.col(id_col), sq8_dequantize(F.col("codes"), mns, scales).alias("deq")
     )
-    return (
-        deq.select(
-            F.col(id_col),
-            F.round(cosine(F.col("deq"), qd), 4).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(deq, id_col, F.col("deq"), _sq8_py(query, mns, scales), k, digits=4)
 
 
 def query_ivf_index(
@@ -371,19 +353,10 @@ def query_ivf_index(
     lists, exact rerank."""
     meta = _read_meta(path)
     centroids = np.asarray(meta["centroids"], dtype=float)
-    q = np.asarray(query, dtype=float)
-    order = np.argsort(((centroids - q) ** 2).sum(axis=1))
-    probes = [int(i) for i in order[:n_probe]]
+    probes = _ivf_probes(centroids, query, n_probe)
     idx = spark.read.parquet(path).filter(F.col("ivf_cell").isin(probes))
     v = F.col(vec_col).cast("array<double>")
-    return (
-        idx.select(
-            F.col(id_col),
-            F.round(cosine(v, _lit_vec(query)), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(idx, id_col, v, query, k)
 
 
 def embedding_near_dup_pairs(
@@ -558,7 +531,6 @@ def sq8_cosine_topk(
     Deterministic end-to-end: ranking on the ROUNDED score + id tiebreak
     so both engines select identical rows (the q50/q22 rule)."""
     mns, scales = sq8_stats(emb, vec_col)
-    qd = _lit_vec(_sq8_py(query, mns, scales))
     codes = sq8_codes(F.col(vec_col), mns, scales)
     # hoist the reconstruction into its own projection: cosine()
     # references its argument three times (dot + both norms), and the
@@ -566,11 +538,4 @@ def sq8_cosine_topk(
     deq = emb.select(
         F.col(id_col), sq8_dequantize(codes, mns, scales).alias("deq")
     )
-    return (
-        deq.select(
-            F.col(id_col),
-            F.round(cosine(F.col("deq"), qd), 4).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(deq, id_col, F.col("deq"), _sq8_py(query, mns, scales), k, digits=4)

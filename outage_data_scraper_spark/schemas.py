@@ -9,7 +9,6 @@ prune columns and Catalyst folds constants.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -78,20 +77,10 @@ FRONTIER = StructType(
     ]
 )
 
-# Exact URL-seen set (anti-join path). The Bloom path stores its bitset
-# in SEEN_BLOOM; both satisfy the `visited` semantics of
-# il_scraper.py:200–204 (false positives only suppress re-fetches).
-SEEN = StructType(
-    [
-        StructField("url_hash", LongType(), False),
-        StructField("url", StringType(), False),
-        StructField("wave", IntegerType(), False),
-        StructField("partition_id", IntegerType(), False),
-    ]
-)
-
 # The crawler's persistent Bloom seen-set: one merged bitset row,
-# overwritten and wave-stamped each wave (frontier/crawler.py).
+# overwritten and wave-stamped each wave (frontier/crawler.py). It keeps
+# the `visited` semantics of il_scraper.py:200–204 (false positives only
+# suppress re-fetches).
 SEEN_BLOOM = StructType(
     [
         StructField("wave", IntegerType(), False),
@@ -160,42 +149,6 @@ RECORDS = StructType(
     ]
 )
 
-# Gold-layer unified outage record (reference: app/pipeline/pipeline.py:64–68).
-GOLD_OUTAGE = StructType(
-    [
-        StructField("utility_provider", StringType(), True),
-        StructField("state", StringType(), True),
-        StructField("county", StringType(), True),
-        StructField("zipcode", StringType(), True),
-        StructField("outage_id", StringType(), True),
-        StructField("start_time", TimestampType(), True),
-        StructField("end_time", TimestampType(), True),
-        StructField("lat", DoubleType(), True),
-        StructField("lng", DoubleType(), True),
-        StructField("duration", DoubleType(), True),
-        StructField("duration_max", DoubleType(), True),
-        StructField("duration_mean", DoubleType(), True),
-        StructField("customer_affected_mean", DoubleType(), True),
-        StructField("total_customer_outage_time", DoubleType(), True),
-        StructField("total_customer_outage_time_max", DoubleType(), True),
-        StructField("total_customer_outage_time_mean", DoubleType(), True),
-    ]
-)
-
-# Sessionizer input (reference: scripts/bluefire/step1_ganz.py:13–25).
-POUS = StructType(
-    [
-        StructField("UtilityName", StringType(), False),
-        StructField("StateName", StringType(), False),
-        StructField("CountyName", StringType(), False),
-        StructField("CityName", StringType(), False),
-        StructField("CountyFIPS", StringType(), True),
-        StructField("CustomersTracked", LongType(), True),
-        StructField("CustomersOut", LongType(), True),
-        StructField("RecordDateTime", TimestampType(), False),
-    ]
-)
-
 # Multimodal asset table: opaque binary payload + typed metadata
 # (training-data pipeline surface; decode itself is stubbed, plumbing real).
 ASSETS = StructType(
@@ -207,13 +160,5 @@ ASSETS = StructType(
         StructField("width", IntegerType(), True),
         StructField("height", IntegerType(), True),
         StructField("duration_s", DoubleType(), True),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(DoubleType()), True),
-        StructField("label", IntegerType(), True),
     ]
 )

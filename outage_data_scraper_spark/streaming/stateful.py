@@ -278,6 +278,34 @@ def sessionize_stream(
     )
 
 
+def _replay(
+    spark: SparkSession,
+    src: DataFrame,
+    thresholds: list,
+    work_dir: str,
+    op,
+    out_schema: StructType,
+) -> DataFrame:
+    """The replay every stateful stream here is gated through: time-split
+    ``src`` (a batch DataFrame with a ``ts`` column) into ordered files,
+    stream them one file per micro-batch through ``op`` (stream →
+    stateful stream), drain with availableNow into a parquet sink, and
+    read the sink back with ``out_schema``."""
+    from .poll import run_available_now
+
+    in_dir = os.path.join(work_dir, "in")
+    write_time_split(src, in_dir, thresholds, ts_col="ts")
+    stream = (
+        spark.readStream.schema(src.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(in_dir)
+    )
+    sink = os.path.join(work_dir, "sink")
+    run_available_now(op(stream), sink, os.path.join(work_dir, "ckpt"))
+    return spark.read.schema(out_schema).parquet(sink)
+
+
 def run_stateful_sessions(
     spark: SparkSession,
     events: DataFrame,
@@ -291,27 +319,17 @@ def run_stateful_sessions(
     """Full replay: time-split files → stateful stream → availableNow
     parquet sink → read back as (key, s_start_us, s_end_us, n_events,
     closed_by) with integer epoch-µs boundaries (cross-engine-stable)."""
-    from .poll import run_available_now
-
     src = events.select(
         F.col(key_col).cast("long").alias("key"),
         F.col(ts_col).cast("timestamp").alias("ts"),
     )
-    in_dir = os.path.join(work_dir, "in")
-    write_time_split(src, in_dir, thresholds, ts_col="ts")
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(in_dir)
-    )
-    sessions = sessionize_stream(
-        stream, ts_col="ts", key_col="key", gap_s=gap_s, delay_s=delay_s
-    )
-    run_available_now(
-        sessions, os.path.join(work_dir, "sink"), os.path.join(work_dir, "ckpt")
-    )
-    return spark.read.schema(SESSION_OUT_SCHEMA).parquet(os.path.join(work_dir, "sink")).select(
+
+    def op(stream):
+        return sessionize_stream(
+            stream, ts_col="ts", key_col="key", gap_s=gap_s, delay_s=delay_s
+        )
+
+    return _replay(spark, src, thresholds, work_dir, op, SESSION_OUT_SCHEMA).select(
         "key",
         F.unix_micros(F.col("s_start")).alias("s_start_us"),
         F.unix_micros(F.col("s_end")).alias("s_end_us"),
@@ -398,34 +416,20 @@ def run_streaming_dedup(
     """Full replay: time-split files → keyed-state dedup stream →
     availableNow parquet sink → read back as (sig, first_ts_us,
     first_id, n_first_batch)."""
-    from .poll import run_available_now
-
     src = events.select(
         sig_expr.alias("sig"),
         F.col(ts_col).cast("timestamp").alias("ts"),
         F.col(id_col).cast("long").alias("rid"),
     )
-    in_dir = os.path.join(work_dir, "in")
-    write_time_split(src, in_dir, thresholds, ts_col="ts")
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(in_dir)
-    )
-    out = dedup_stream(stream, sig_col="sig", ts_col="ts", id_col="rid")
-    run_available_now(
-        out, os.path.join(work_dir, "sink"), os.path.join(work_dir, "ckpt")
-    )
-    return (
-        spark.read.schema(DEDUP_OUT_SCHEMA)
-        .parquet(os.path.join(work_dir, "sink"))
-        .select(
-            "sig",
-            F.unix_micros(F.col("first_ts")).alias("first_ts_us"),
-            "first_id",
-            "n_first_batch",
-        )
+
+    def op(stream):
+        return dedup_stream(stream, sig_col="sig", ts_col="ts", id_col="rid")
+
+    return _replay(spark, src, thresholds, work_dir, op, DEDUP_OUT_SCHEMA).select(
+        "sig",
+        F.unix_micros(F.col("first_ts")).alias("first_ts_us"),
+        "first_id",
+        "n_first_batch",
     )
 
 
@@ -528,33 +532,19 @@ def run_streaming_dedup_ttl(
     """Full replay of dedup_stream_ttl over time-split files → parquet
     sink → (sig, first_ts_us, first_id), possibly several rows per sig
     (one per eviction island)."""
-    from .poll import run_available_now
-
     src = events.select(
         sig_expr.alias("sig"),
         F.col(ts_col).cast("timestamp").alias("ts"),
         F.col(id_col).cast("long").alias("rid"),
     )
-    in_dir = os.path.join(work_dir, "in")
-    write_time_split(src, in_dir, thresholds, ts_col="ts")
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(in_dir)
-    )
-    out = dedup_stream_ttl(
-        stream, ttl_s, delay_s, sig_col="sig", ts_col="ts", id_col="rid"
-    )
-    run_available_now(
-        out, os.path.join(work_dir, "sink"), os.path.join(work_dir, "ckpt")
-    )
-    return (
-        spark.read.schema(DEDUP_TTL_OUT_SCHEMA)
-        .parquet(os.path.join(work_dir, "sink"))
-        .select(
-            "sig",
-            F.unix_micros(F.col("first_ts")).alias("first_ts_us"),
-            "first_id",
+
+    def op(stream):
+        return dedup_stream_ttl(
+            stream, ttl_s, delay_s, sig_col="sig", ts_col="ts", id_col="rid"
         )
+
+    return _replay(spark, src, thresholds, work_dir, op, DEDUP_TTL_OUT_SCHEMA).select(
+        "sig",
+        F.unix_micros(F.col("first_ts")).alias("first_ts_us"),
+        "first_id",
     )

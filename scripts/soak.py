@@ -252,7 +252,7 @@ def soak_q20(inp: Inputs, out: dict) -> None:
         out["q20_pairs"] = cands.count()
 
 
-@soak("q68", "train_bpe(30 merges): O(vocab) rounds over a corpus >> vocab", DOCS)
+@soak("q68", "train_bpe(30 merges): one corpus pass, then driver-side O(vocab) rounds", DOCS)
 def soak_q68(inp: Inputs, out: dict) -> None:
     with timed(out, "q68_s"):
         merges = bpe.train_bpe(inp.docs, 30)

@@ -300,14 +300,26 @@ def test_real_image_features_from_pixels(spark):
 
 
 def test_resize_images_real(spark):
-    assets = multimodal.synth_assets(spark, 12)
-    resized = multimodal.resize_images(assets, 8, 6).collect()
+    import numpy as np
+
+    # plus one lossless WebP (VP8L) row: resize decodes through
+    # decode_image, so every format it decodes resizes
+    src = (np.add.outer(np.arange(12) * 9, np.arange(16) * 5) % 256).astype(np.uint8)
+    src = np.stack([src, 255 - src, src // 2], axis=2)
+    webp = spark.createDataFrame(
+        [(99, multimodal.encode_webp(src))], "asset_id long, payload binary"
+    )
+    assets = multimodal.synth_assets(spark, 12).select("asset_id", "payload")
+    resized = multimodal.resize_images(assets.unionByName(webp), 8, 6).collect()
     kinds = {r.asset_id: r for r in resized}
     imgs = [r for r in resized if r.payload is not None]
-    assert len(imgs) == 4  # every third asset is an image
+    assert len(imgs) == 5  # every third asset is an image, plus the WebP
     for r in imgs:
         arr = multimodal.decode_image(bytes(r.payload))
         assert arr.shape == (6, 8, 3)
+    # nearest-neighbor: output pixel (y, x) is source (2y, 2x)
+    got = multimodal.decode_image(bytes(kinds[99].payload))
+    assert np.array_equal(got, src[::2, ::2])
     # non-image payloads pass through as null (no native decoder)
     assert all(r.payload is None for r in resized if r.asset_id % 3 != 0)
 
@@ -873,6 +885,29 @@ def test_connected_components_star_parity(spark):
     star2 = {r.node: r.label for r in connected_components_star(df2).collect()}
     prop2 = {r.node: r.label for r in connected_components(df2).collect()}
     assert star2 == prop2
+
+
+def test_connected_components_raise_instead_of_partial_labels(spark):
+    """A 30-node chain needs 29 min-label rounds, past the default cap
+    of 25: min-label propagation raises (naming the star path) instead
+    of returning node 29 labelled 3; the star path labels all 30, and
+    raises too when its own cap runs out."""
+    import pytest
+
+    from outage_data_scraper_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="connected_components_star"):
+        connected_components(chain)
+    star = {r.node: r.label for r in connected_components_star(chain).collect()}
+    assert star == {i: 0 for i in range(30)}
+    with pytest.raises(RuntimeError, match="max_iter=1 "):
+        connected_components_star(chain, max_iter=1)
 
 
 def test_span_dedup_fast_path_broadcasts_and_matches(spark):
@@ -1657,6 +1692,16 @@ def test_bpe_train_hand_derived(spark):
         (2, "a", "b", "ab", 1),
         (3, "ab", "</w>", "ab</w>", 1),
     ]
+    # 'aaa': (a, a) counts at both overlapping positions (pf 2), but the
+    # merge rewrites left to right without overlap — [aa, a, </w>], so
+    # the next merge is (a, </w>), not a second (a, a)
+    docs = spark.createDataFrame([(0, "aaa")], "doc_id long, text string")
+    got = [tuple(r) for r in bpe.train_bpe(docs, n_merges=10).orderBy("step").collect()]
+    assert got == [
+        (0, "a", "a", "aa", 2),
+        (1, "a", "</w>", "a</w>", 1),
+        (2, "aa", "a</w>", "aaa</w>", 1),
+    ]
 
 
 def test_bpe_train_matches_python_twin(spark):
@@ -1677,40 +1722,6 @@ def test_bpe_train_matches_python_twin(spark):
     got = [tuple(r) for r in bpe.train_bpe(docs, n_merges=12).orderBy("step").collect()]
     want = bpe.train_bpe_py(texts, 12)
     assert got == want
-
-
-def test_bpe_collected_path_parity(spark):
-    """train_bpe_collected (ONE corpus shuffle, driver-side merge loop)
-    must emit the byte-identical merge table as the distributed loop on
-    seeded corpora — the fast path is a pure execution-strategy swap."""
-    import numpy as np
-
-    from outage_data_scraper_spark.operators import bpe
-
-    for seed in (3, 11):
-        rng = np.random.default_rng(seed)
-        words = [
-            "".join(rng.choice(list("abcdef"), size=rng.integers(2, 8)))
-            for _ in range(60)
-        ]
-        texts = [
-            " ".join(rng.choice(words, size=rng.integers(3, 12)))
-            for _ in range(30)
-        ]
-        docs = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        dist = [
-            tuple(r)
-            for r in bpe.train_bpe(docs, n_merges=15).orderBy("step").collect()
-        ]
-        fast = [
-            tuple(r)
-            for r in bpe.train_bpe_collected(docs, n_merges=15)
-            .orderBy("step")
-            .collect()
-        ]
-        assert fast == dist
 
 
 def test_bpe_encode_words_roundtrip(spark):
