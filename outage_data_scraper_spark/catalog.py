@@ -41,6 +41,17 @@ from pyspark.sql.types import StructType
 _MANIFEST = "_manifest.json"
 
 
+def _data_files(path: str) -> list[str]:
+    """A snapshot dir's parquet data files, partition subdirs included
+    (not Spark's ``_SUCCESS`` or ``.crc`` side files)."""
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
 def _live(snaps: list[dict]) -> list[dict]:
     """The snapshots a read sees: the last overwrite plus later appends."""
     start = max((i for i, s in enumerate(snaps) if s["mode"] == "overwrite"), default=0)
@@ -106,7 +117,8 @@ class SnapshotCatalog:
         mode: str = "append",
         wave: int | None = None,
         partition_by: list[str] | None = None,
-    ) -> int:
+        skip_empty: bool = False,
+    ) -> int | None:
         """Append or overwrite; returns the new snapshot id.
 
         The snapshot's data dir is fully written before the manifest
@@ -122,6 +134,10 @@ class SnapshotCatalog:
         pages by day, FIXTURES.md §1.1) so scans with partition
         predicates prune files. An append must keep the live snapshots'
         spec; an overwrite may change it.
+
+        ``skip_empty`` commits nothing and returns None when the written
+        files hold no rows, read from their parquet footers on the
+        driver: the caller learns emptiness without a counting job.
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
@@ -152,6 +168,9 @@ class SnapshotCatalog:
                 if partition_by:
                     writer = writer.partitionBy(*partition_by)
                 writer.parquet(path)
+            if skip_empty and not any(pq.read_metadata(f).num_rows for f in _data_files(path)):
+                shutil.rmtree(path, ignore_errors=True)
+                return None
             manifest["snapshots"].append(
                 {
                     "id": snap_id,
@@ -170,17 +189,22 @@ class SnapshotCatalog:
         name: str,
         snapshot: int | None = None,
         schema: StructType | None = None,
+        since: int | None = None,
     ) -> DataFrame:
         """Read table state as of ``snapshot`` (default: current).
 
         State = the last overwrite at or before the requested snapshot plus
         every later append (Iceberg time travel over append/replace
         snapshots), read as one scan over the live snapshot dirs.
+        ``since`` keeps only the live snapshots newer than that id: the
+        rows they added (Iceberg's incremental read).
         """
         snaps = self.snapshots(name)
         if snapshot is not None:
             snaps = [s for s in snaps if s["id"] <= snapshot]
         live = _live(snaps)
+        if since is not None:
+            live = [s for s in live if s["id"] > since]
         if not live:
             if schema is None:
                 raise ValueError(f"table {name!r} is empty and no schema given")
@@ -198,6 +222,13 @@ class SnapshotCatalog:
         if schema is None:
             return reader.parquet(*paths).drop("snap")
         return reader.schema(schema).parquet(*paths).select(*schema.fieldNames())
+
+    def snapshot_rows(self, name: str, snapshot: int) -> int:
+        """Rows in one snapshot's own files, summed from their parquet
+        footers on the driver: no Spark job."""
+        (snap,) = [s for s in self.snapshots(name) if s["id"] == snapshot]
+        path = os.path.join(self._table_dir(name), snap["dir"])
+        return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
 
     def rollback(self, name: str, snapshot: int) -> None:
         """Drop snapshots newer than ``snapshot`` (crash-recovery path)."""

@@ -11,8 +11,11 @@ Replaces the reference's sequential handler loop (app/main.py:13–64) with:
         stop if popped was empty (no text/error rows) — nothing committed
         append records / pages-text / fetch_log
         children = discovered URLs, deduped against everything enqueued
-                   (exact anti-join or Bloom fast path) → append to frontier
+                   (exact anti-join or Bloom fast path), written straight
+                   to frontier; their count is the written files' footer
+                   row count, and no children commit no frontier snapshot
         commit wave marker (one driver-written parquet row: no Spark job)
+        stop if the wave drained pending (WaveStats.drained)
 
 State design: the frontier is an *append-only enqueue log*; "pending" is
 derived (frontier ANTI fetch_log), so no table is ever rewritten in place
@@ -27,12 +30,22 @@ SURVEY.md §4.4's "exactly two shuffles per wave" — and one Python stage
 (the fetched payloads never leave the worker that fetched them). The
 pending anti-join is evaluated once per wave: the wave's own pop is the
 termination test, not a separate emptiness probe.
+
+Stop rule: ``run()`` stops after a committed wave that provably left
+nothing pending, so a drained crawl runs no trailing empty wave. The
+proof is exact and costs no Spark action: the wave found no children,
+no domain budget apportioned it, a wave budget (if any) did not bind
+(``popped < wave_budget``), and no host popped ``per_host_k`` URLs
+(``pop_wave``'s ``host_popped`` rides the fused stage into the wave's
+one counting aggregate). Then every pending URL was popped and is now
+in fetch_log. A wave that cannot prove it runs the next wave, whose
+empty pop ends the crawl as before.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import asdict, dataclass
+from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -90,6 +103,11 @@ def first_discoveries(parsed: DataFrame, wave: int) -> DataFrame:
 
 @dataclass
 class WaveStats:
+    """One committed wave. Every field but ``drained`` is a column of the
+    ``waves`` marker row (schemas.WAVES). ``drained`` is True when the
+    wave provably popped every pending URL and found no children, so the
+    next pop is empty (module docstring, stop rule)."""
+
     wave: int
     popped: int
     ok: int
@@ -97,6 +115,7 @@ class WaveStats:
     records: int
     children: int
     wall_s: float
+    drained: bool
 
 
 class Crawler:
@@ -358,10 +377,11 @@ class Crawler:
         # per-wave fixed cost at small wave sizes. Every popped URL yields
         # exactly one text or error row (robots denials included), so
         # ok + failed == 0 is the crawl's termination test: no separate
-        # pending probe.
+        # pending probe. The same action takes the largest per-host
+        # popped count, which the stop rule reads.
         kind_stats = (
             parsed.groupBy("kind", (F.col("status") == 200).alias("ok"))
-            .count()
+            .agg(F.count(F.lit(1)).alias("count"), F.max("host_popped").alias("host_popped"))
             .collect()
         )
         n_records = sum(r["count"] for r in kind_stats if r["kind"] == "record")
@@ -425,6 +445,9 @@ class Crawler:
         # chain touches only frontier/seen_bloom, so it rides the same
         # concurrent pool as the three table commits above (it is usually
         # the wave's longest tail: window + anti-join + write + bloom OR).
+        # The children go straight to frontier, uncached: the write is
+        # the chain's one job, its files' footers give the count, and an
+        # empty write commits no snapshot.
         def child_chain() -> int:
             children = first_discoveries(parsed, wave)
             if self.seen_mode == "exact":
@@ -436,16 +459,16 @@ class Crawler:
                 if bloom is None:  # e.g. bootstrapped before bloom mode existed
                     bloom = self._bloom_add(self.frontier().select("url"), wave=wave - 1)
                 fresh = filter_unseen_bloom(children, bloom)
-            fresh = fresh.cache()
-            n = fresh.count()
-            try:
-                if n:
-                    self.cat.write("frontier", fresh, wave=wave)
-                    if self.seen_mode == "bloom":
-                        self._bloom_add(fresh.select("url"), wave=wave, base=bloom)
-            finally:
-                fresh.unpersist()
-            return n
+            snap = self.cat.write("frontier", fresh, wave=wave, skip_empty=True)
+            if snap is None:
+                return 0
+            if self.seen_mode == "bloom":
+                # the URLs read back from the snapshot just written: the
+                # window and probe behind `fresh` do not run again
+                added = self.cat.read(self.spark, "frontier", snapshot=snap, since=snap - 1,
+                                      schema=schemas.FRONTIER)
+                self._bloom_add(added.select("url"), wave=wave, base=bloom)
+            return self.cat.snapshot_rows("frontier", snap)
 
         with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
             child_fut = pool.submit(child_chain)
@@ -453,11 +476,21 @@ class Crawler:
                 fut.result()  # propagate the first failure, wave aborts
             n_children = child_fut.result()
 
+        popped = ok + failed
+        host_max = max(r["host_popped"] for r in kind_stats)
+        drained = (
+            n_children == 0
+            and self.domain_budget is None
+            and (self.wave_budget is None or popped < self.wave_budget)
+            and host_max < self.per_host_k
+        )
         stats = WaveStats(
-            wave, ok + failed, ok, failed, n_records, n_children, time.monotonic() - t0
+            wave, popped, ok, failed, n_records, n_children, time.monotonic() - t0,
+            drained,
         )
         # the wave commit point: one driver-written row, no Spark job
-        self.cat.write("waves", _row(schemas.WAVES, **asdict(stats)), wave=wave)
+        marker = {c: getattr(stats, c) for c in schemas.WAVES.fieldNames()}
+        self.cat.write("waves", _row(schemas.WAVES, **marker), wave=wave)
         return stats
 
     def compact(self) -> None:
@@ -473,6 +506,8 @@ class Crawler:
                 self.cat.compact(self.spark, table)
 
     def run(self, max_waves: int = 10) -> list[WaveStats]:
+        """Run waves until the crawl is done: after a wave that drained
+        pending, or at a wave whose pop is empty (it commits nothing)."""
         out = []
         wave = self.last_committed_wave() + 1 if self.cat.exists("waves") else 1
         for w in range(wave, wave + max_waves):
@@ -480,4 +515,6 @@ class Crawler:
             if ws is None:  # empty pop: the crawl is done
                 break
             out.append(ws)
+            if ws.drained:
+                break
         return out

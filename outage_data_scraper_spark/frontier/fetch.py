@@ -30,14 +30,14 @@ FETCH_RESULT_SCHEMA = (
     "url string, host string, state string, layout string, emc string, "
     "family string, depth int, event_seq int, seed_seq int, child_seq int, "
     "wave int, status int, reason string, bytes long, html binary, "
-    "partition_id int, wait_s double"
+    "host_popped long, partition_id int, wait_s double"
 )
 
 _IN_COLS = [
     "url", "host", "state", "layout", "emc", "family",
     "depth", "event_seq", "seed_seq", "child_seq", "wave",
 ]
-_OPT_COLS = ("rate_override", "n_lanes", "robots_allow")
+_OPT_COLS = ("rate_override", "n_lanes", "robots_allow", "host_popped")
 
 
 def fetch_wave(
@@ -73,8 +73,8 @@ def fetch_stage(
     ``fetcher_factory`` is called once per partition (so connection pools /
     fixture stores initialize executor-side, not on the driver).
 
-    Optional ``popped`` columns, each nullable per row, are the only
-    inputs to pacing besides ``rate_per_host``:
+    Optional ``popped`` columns, each nullable per row. The first three
+    are the only inputs to pacing besides ``rate_per_host``:
     - ``rate_override`` (req/s): robots Crawl-delay, joined in by the
       robots gate — never a driver-side host dict, which would OOM at
       10^8-host scale. Null means ``rate_per_host``.
@@ -82,6 +82,9 @@ def fetch_stage(
       lane paces at rate∕n_lanes. Null means one lane at the full rate.
     - ``robots_allow``: False marks a robots-denied URL, logged as a 451
       without a request (``robots.robots_gate(..., flag=...)``).
+
+    ``host_popped`` (pop_wave's per-host popped count) is not a pacing
+    input: it passes through to every output row, null when absent.
     """
     opt = [c for c in _OPT_COLS if c in popped.columns]
     part = popped.repartition(num_parts, "salted_part").select(*_IN_COLS, *opt)
@@ -149,4 +152,7 @@ def fetch_partition(
             out["bytes"].append(len(payload) if payload is not None else 0)
             out["html"].append(payload)
             waits.append(wait)
-        yield chunk[_IN_COLS].assign(**out, partition_id=pid, wait_s=waits)
+        yield chunk[_IN_COLS].assign(
+            **out, host_popped=_nullable(chunk, "host_popped", int),
+            partition_id=pid, wait_s=waits,
+        )

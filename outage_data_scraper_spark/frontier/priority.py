@@ -68,9 +68,12 @@ def pop_wave(
     unit (≤ 1 per domain, only when budget > domain pool). Composes
     with ``wave_budget`` (domain quotas first, global cut after).
 
-    Returns the popped rows with a ``salted_part`` fetch-partition column
-    and the host's ``n_lanes`` lane count, which the fetch stage's pacer
-    divides the host's rate by. Popping marks nothing: a URL is done once
+    Returns the popped rows with a ``salted_part`` fetch-partition column,
+    the host's ``n_lanes`` lane count, which the fetch stage's pacer
+    divides the host's rate by, and ``host_popped``, the host's popped
+    row count this wave (below ``per_host_k`` for every host, and the
+    budgets not binding, means the pop took every pending row —
+    Crawler's stop rule). Popping marks nothing: a URL is done once
     the wave appends its fetch_log row, and the next wave's ``pending()``
     anti-joins it away (Crawler.pending).
 
@@ -97,13 +100,13 @@ def pop_wave(
         # popped-per-host count shares the window's hash partitioning —
         # no extra shuffle (un-budgeted path); it sizes the adaptive
         # fetch lanes below
-        .withColumn("cnt", F.count(F.lit(1)).over(wc))
+        .withColumn("host_popped", F.count(F.lit(1)).over(wc))
     )
     # single projection for both derived columns (withColumns, not two
     # chained withColumn Projects): every Project node costs analyzer +
     # optimizer time PER WAVE on the driver — fixed wall that does not
     # shrink with cluster size, i.e. pure scaling-efficiency loss
-    lanes = urlkit.adaptive_lanes(F.col("cnt"), num_parts, salt, lane_cap)
+    lanes = urlkit.adaptive_lanes(F.col("host_popped"), num_parts, salt, lane_cap)
     return popped.withColumns(
         {
             "n_lanes": lanes,
@@ -111,7 +114,7 @@ def pop_wave(
                 F.col("host"), num_parts, F.col("rn"), lanes
             ),
         }
-    ).drop("rn", "cnt")
+    ).drop("rn")
 
 
 def _domain_cut(popped: DataFrame, budget: int, n_buckets: int = 1024) -> DataFrame:

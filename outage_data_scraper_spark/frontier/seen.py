@@ -290,8 +290,13 @@ def unsee_urls(cuckoo: CuckooFilter, df: DataFrame, url_col: str = "url") -> int
 def filter_unseen_exact(candidates: DataFrame, seen: DataFrame, url_col: str = "url") -> DataFrame:
     """Exact path: anti-join on the canonical URL. At scale the join key
     is the 64-bit url_hash first (cheap shuffle) with the string equality
-    as the residual — Catalyst plans that from this one expression."""
-    seen_keys = seen.select(F.col(url_col).alias("__seen_url")).distinct()
+    as the residual — Catalyst plans that from this one expression.
+
+    The seen side is not deduplicated: a left-anti join keeps the same
+    candidate rows whatever the multiplicity of the right side's keys,
+    and a ``distinct`` there would plan one more aggregate and shuffle
+    per call (tests/test_plans.py pins its absence)."""
+    seen_keys = seen.select(F.col(url_col).alias("__seen_url"))
     return candidates.join(
         seen_keys, candidates[url_col] == F.col("__seen_url"), "left_anti"
     )

@@ -31,14 +31,15 @@ from .families import canonical_text, parse_payload
 PARSE_OUT_SCHEMA = (
     "url string, host string, state string, layout string, emc string, "
     "family string, depth int, event_seq int, seed_seq int, child_seq int, "
-    "wave int, bytes long, partition_id int, kind string, level string, "
-    "data string, text string, child_url string, child_rank int, "
+    "wave int, bytes long, partition_id int, host_popped long, kind string, "
+    "level string, data string, text string, child_url string, child_rank int, "
     "status int, reason string"
 )
 
 # every output row carries its page's fetch metadata (fetch_log's bytes and
-# partition_id come from the page's text/error row)
-_CARRY = [*_IN_COLS, "bytes", "partition_id"]
+# partition_id come from the page's text/error row) and its host's popped
+# count (the crawler's stop rule reads its max)
+_CARRY = [*_IN_COLS, "bytes", "partition_id", "host_popped"]
 
 _OUT_COLS = [*_CARRY, "kind", "level", "data", "text", "child_url", "child_rank", "status", "reason"]
 

@@ -91,7 +91,8 @@ SEEN_BLOOM = StructType(
 )
 
 # One wave-marker row per committed crawl wave: its append is the wave's
-# commit point (frontier/crawler.py). Columns match WaveStats.
+# commit point (frontier/crawler.py). Columns are WaveStats' fields except
+# its in-memory `drained` flag.
 WAVES = StructType(
     [
         StructField("wave", IntegerType(), False),

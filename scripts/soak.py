@@ -191,7 +191,7 @@ def soak_q49(inp: Inputs, out: dict) -> None:
     out["q49_removed"] = int(agg["removed"])
 
 
-@soak("q47", "ngram_jaccard_pairs(k=3, j>=0.12) -> connected_components_star", DOCS,
+@soak("q47", "ngram_jaccard_pairs(k=3, j>=0.12) -> connected_components", DOCS,
       # every replica clique collapses: fewer components than nodes
       lambda r, i: 0 < r["q47_components"] < r["q47_nodes"])
 def soak_q47(inp: Inputs, out: dict) -> None:
@@ -199,7 +199,7 @@ def soak_q47(inp: Inputs, out: dict) -> None:
         pairs = dedup.ngram_jaccard_pairs(inp.docs, k_shingle=3, min_jaccard=0.12)
         pairs = pairs.localCheckpoint()
         n_pairs = pairs.count()
-        comp = dedup.connected_components_star(pairs)
+        comp = dedup.connected_components(pairs)  # q47's min-label kernel
         n_comp = comp.select("label").distinct().count()
         n_nodes = comp.count()
     out["q47_pairs"] = n_pairs

@@ -18,6 +18,37 @@ def test_append_and_time_travel(spark, tmp_catalog_dir):
     assert cat.current_snapshot_id("t") == s2
 
 
+@pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["flat", "partitioned"])
+def test_skip_empty_commits_nothing_and_footers_count_rows(spark, tmp_catalog_dir, partition_by):
+    """skip_empty: a write of no rows commits no snapshot and returns None;
+    a committed snapshot's rows come from its parquet footers (no Spark
+    job) and ``since`` reads back only the rows it added."""
+    cat = SnapshotCatalog(tmp_catalog_dir)
+
+    def write(vals):
+        df = spark.createDataFrame([(v, v % 2) for v in vals], "x int, p int")
+        return cat.write("t", df, partition_by=partition_by, skip_empty=True)
+
+    s1 = write([1, 2])
+    before = cat.snapshots("t")
+    assert write([]) is None
+    assert cat.snapshots("t") == before
+    s2 = write([3, 4, 5])
+    assert s2 == s1 + 1
+
+    sc = spark.sparkContext
+    sc.setJobGroup("footer-rows", "footer-rows")
+    try:
+        rows = [cat.snapshot_rows("t", s1), cat.snapshot_rows("t", s2)]
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows == [2, 3]
+    assert list(sc.statusTracker().getJobIdsForGroup("footer-rows")) == []
+    added = cat.read(spark, "t", snapshot=s2, since=s1)
+    assert sorted(r.x for r in added.collect()) == [3, 4, 5]
+    assert sorted(r.x for r in cat.read(spark, "t", since=s2 - 2).collect()) == [1, 2, 3, 4, 5]
+
+
 def test_overwrite_resets_state(spark, tmp_catalog_dir):
     cat = SnapshotCatalog(tmp_catalog_dir)
     cat.write("t", _df(spark, [1, 2]))

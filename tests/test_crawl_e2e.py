@@ -261,6 +261,20 @@ def test_wave_marker_commit_launches_no_spark_job(spark, tmp_path_factory):
     assert got == [(s.wave, s.popped, s.ok, s.failed, s.records, s.children) for s in stats]
 
 
+def test_children_snapshot_per_wave(spark, crawled):
+    """The child chain writes children straight to frontier: a wave with
+    no children commits no frontier snapshot, and a wave's children count
+    equals the rows of the snapshot it wrote."""
+    _, cat = crawled
+    children = {r.wave: r.children for r in cat.read(spark, "waves").collect()}
+    snaps = {s["wave"]: s for s in cat.snapshots("frontier") if s["wave"]}
+    assert 0 in children.values() and any(children.values()), children
+    assert set(snaps) == {w for w, n in children.items() if n}
+    for w, snap in snaps.items():
+        path = f"{cat.root}/frontier/{snap['dir']}"
+        assert spark.read.parquet(path).count() == children[w]
+
+
 def test_bloom_seen_mode_crawl(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("crawl-bloom"))
     cat = SnapshotCatalog(root)
@@ -693,19 +707,71 @@ def test_run_on_finished_crawl_commits_nothing(spark, tmp_path_factory, budget):
     assert c.last_committed_wave() == last
 
 
+def _jobs_so_far(spark) -> int:
+    """Highest ungrouped Spark job id so far (every thread's jobs)."""
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
 def test_run_evaluates_pending_once_per_wave(spark, tmp_path_factory):
-    """run() has no separate emptiness probe: every wave (the final, empty
-    one included) builds pending() exactly once, inside its own pop."""
+    """run() has no separate emptiness probe and, once a wave drains
+    pending, no trailing empty wave: with per_host_k above every host's
+    pool the last committed wave proves the next pop empty, so pending()
+    is built once per committed wave and no Spark job runs after it."""
     root = str(tmp_path_factory.mktemp("crawl-pending-count"))
     cat = SnapshotCatalog(root)
-    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=4, num_parts=8,
+    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=100, num_parts=8,
                 rate_per_host=100.0)
     c.bootstrap(fixture_miniweb_seeds(spark))
-    calls = []
-    real_pending = c.pending
+    calls, wave_ends = [], []
+    real_pending, real_run_wave = c.pending, c.run_wave
     c.pending = lambda: calls.append(1) or real_pending()
+
+    def run_wave(wave):
+        try:
+            return real_run_wave(wave)
+        finally:
+            wave_ends.append(_jobs_so_far(spark))
+
+    c.run_wave = run_wave
     stats = c.run(max_waves=30)
-    assert stats and len(calls) == len(stats) + 1
+    assert stats and len(calls) == len(stats) == len(wave_ends)
+    assert stats[-1].drained and not any(s.drained for s in stats[:-1])
+    assert _jobs_so_far(spark) == wave_ends[-1]
+    assert {r.url for r in c.fetch_log().select("url").collect()} == set(
+        reference_order(spark)
+    )
+
+
+def test_zero_child_wave_that_leaves_host_urls_keeps_crawling(spark, tmp_path_factory):
+    """A wave with no children does not stop the crawl while a host
+    popped per_host_k URLs: three seeds on one host (two endpoints each,
+    no outlinks) at per_host_k=1 take one wave per URL."""
+    root = str(tmp_path_factory.mktemp("crawl-k1-no-children"))
+    cat = SnapshotCatalog(root)
+    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=1, num_parts=8,
+                rate_per_host=100.0)
+    c.bootstrap(
+        fixture_miniweb_seeds(spark).filter(
+            F.col("url").contains("//hot.") & (F.col("seed_seq") < 3)
+        )
+    )
+    seeds = {r.url for r in c.frontier().select("url").collect()}
+    assert len(seeds) == 6
+    stats = c.run(max_waves=30)
+    assert [(s.popped, s.children, s.drained) for s in stats] == [(1, 0, False)] * 6
+    assert sorted(r.url for r in c.fetch_log().select("url").collect()) == sorted(seeds)
+
+
+def test_binding_wave_budget_keeps_crawling(spark, tmp_path_factory):
+    """A wave whose pop the wave budget cut is not drained, even with no
+    children and every host below per_host_k: the crawl goes on until
+    every reachable URL is fetched once."""
+    root = str(tmp_path_factory.mktemp("crawl-wave-budget"))
+    c, _ = crawl(spark, root, per_host_k=100, wave_budget=8)
+    stats = c.cat.read(spark, "waves").orderBy("wave").collect()
+    assert any(s.popped == 8 and s.children == 0 for s in stats[:-1]), stats
+    log = [r.url for r in c.fetch_log().select("url").collect()]
+    assert sorted(log) == sorted(set(reference_order(spark)))
 
 
 def _robots_for_all_hosts(spark, c, policy: str, crawl_delay):

@@ -247,6 +247,21 @@ def test_frontier_pop_top_k_combined_map_side(spark):
     assert any(t.startswith("WindowGroupLimit") and t.endswith("4, Final") for t in above)
 
 
+def test_exact_seen_filter_plans_no_aggregate(spark):
+    """filter_unseen_exact joins the seen side as given: no distinct, so
+    no HashAggregate (and none of its stages) on the way into the
+    anti-join."""
+    from outage_data_scraper_spark.frontier.seen import filter_unseen_exact
+
+    def urls(n):
+        return spark.range(n).select(
+            F.concat(F.lit("https://h/"), F.col("id").cast("string")).alias("url")
+        )
+
+    q = filter_unseen_exact(urls(100), urls(50))
+    assert count_nodes(q, "HashAggregate") == 0, q._jdf.queryExecution().executedPlan().toString()
+
+
 def test_child_first_discovery_top1_combined_map_side(spark):
     """child_chain's first-discovery `rn == 1` cut plans a WindowGroupLimit
     whose Partial half keeps each map task's top-1 per child URL below the
@@ -255,7 +270,7 @@ def test_child_first_discovery_top1_combined_map_side(spark):
     from outage_data_scraper_spark.parsers.parse import PARSE_OUT_SCHEMA
 
     rows = [
-        (f"https://p/{i}", "p", "ga", "1", "e", "ga1", 0, i, i % 3, 0, 1, 0, 0,
+        (f"https://p/{i}", "p", "ga", "1", "e", "ga1", 0, i, i % 3, 0, 1, 0, 0, 1,
          "child", None, None, None, f"https://c/{i % 5}", i % 2, 200, None)
         for i in range(40)
     ]
@@ -299,7 +314,7 @@ def test_crawl_wave_two_shuffle_budget(spark, tmp_path):
     Crawler.run_wave executes fuses fetch and parse in a single
     MapInPandas. Planned at the first wave, where the empty fetch_log
     prunes the pending anti-join (later waves add that join's own
-    shuffles on the fetch_log side)."""
+    exchanges, one per side, unless it is planned as a broadcast)."""
     from outage_data_scraper_spark.catalog import SnapshotCatalog
     from outage_data_scraper_spark.frontier.crawler import Crawler
     from outage_data_scraper_spark.sources.fixtures import make_fixture_fetcher

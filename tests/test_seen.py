@@ -28,6 +28,21 @@ def test_exact_anti_join(spark):
     assert kept == {f"https://h/{i}" for i in range(1, 10, 2)}
 
 
+def test_exact_anti_join_ignores_seen_side_multiplicity(spark):
+    """The seen side is joined as given (no distinct): a left-anti join
+    keeps the same candidate rows, duplicates included, whether the seen
+    keys repeat or not."""
+    cand = _urls(spark, [f"https://h/{i % 7}" for i in range(20)])
+    seen = [f"https://h/{i}" for i in range(0, 10, 2)]
+
+    def kept(seen_urls):
+        return sorted(r.url for r in filter_unseen_exact(cand, _urls(spark, seen_urls)).collect())
+
+    assert kept(seen * 3) == kept(seen) == sorted(
+        f"https://h/{i % 7}" for i in range(20) if (i % 7) % 2
+    )
+
+
 def test_bloom_no_false_negatives_and_subset_of_exact(spark):
     seen_urls = [f"https://seen.example/{i}" for i in range(2000)]
     cand_urls = seen_urls[:500] + [f"https://new.example/{i}" for i in range(2000)]
