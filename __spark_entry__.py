@@ -2076,13 +2076,11 @@ def q112_domain_fair_wave(spark, sf_dir):
     fr = docs.select(
         F.concat(F.lit("https://"), host, F.lit("/p/"), F.col("doc_id")).alias("url"),
         host.alias("host"),
-        F.lit(0).alias("salted_part"),
         (F.col("doc_id") % 4).cast("double").alias("priority"),
         F.lit(0).alias("depth"),
         (F.col("doc_id") % 7).cast("int").alias("event_seq"),
         F.col("doc_id").cast("int").alias("seed_seq"),
         F.lit(0).alias("child_seq"),
-        F.lit("pending").alias("status"),
     )
     return (
         pop_wave(fr, per_host_k=5, num_parts=8, domain_budget=60)

@@ -17,8 +17,9 @@ Replaces the reference's sequential handler loop (app/main.py:13–64) with:
         commit wave marker (one driver-written parquet row: no Spark job)
         stop if the wave drained pending (WaveStats.drained)
 
-State design: the frontier is an *append-only enqueue log*; "pending" is
-derived (frontier ANTI fetch_log), so no table is ever rewritten in place
+State design: the frontier is an *append-only enqueue log* whose rows
+carry no status; "pending" is derived (frontier ANTI fetch_log), so no
+table is ever rewritten in place
 — every wave is a set of appends plus one wave-marker commit. A killed job
 resumes by rolling back any table snapshot newer than the last committed
 wave marker (resume()); re-fetching never happens because fetch_log is the
@@ -89,13 +90,11 @@ def first_discoveries(parsed: DataFrame, wave: int) -> DataFrame:
         .select(
             F.col("child_url").alias("url"),
             urlkit.host(F.col("child_url")).alias("host"),
-            F.lit(0).alias("salted_part"),
             F.lit(0.0).alias("priority"),
             (F.col("depth") + 1).alias("depth"),
             "event_seq", "seed_seq",
             F.col("child_rank").alias("child_seq"),
             "state", "layout", "emc", "family",
-            F.lit("pending").alias("status"),
             F.lit(wave).alias("wave"),
         )
     )
@@ -399,7 +398,6 @@ class Crawler:
         # the reference's {state}/layout_{id}/ CSV path (app/main.py:29)
         records = parsed.filter(F.col("kind") == "record").select(
             "url", "state", "layout", "emc", "level", "data",
-            F.lit(None).cast("string").alias("text"),
             run_ts.alias("run_ts"), F.col("wave"),
         )
 

@@ -35,9 +35,9 @@ def pop_wave(
     wave_budget: int | None = None,
     domain_budget: int | None = None,
 ) -> DataFrame:
-    """Select this wave's fetch batch: top-k pending URLs per host,
-    then (optionally) the global top ``wave_budget`` rows by the
-    crawl-ordering law.
+    """Select this wave's fetch batch from ``frontier``, the pending
+    rows (Crawler.pending): top-k URLs per host, then (optionally) the
+    global top ``wave_budget`` rows by the crawl-ordering law.
 
     ``wave_budget`` is the budgeted-crawl mode: with per-host quotas
     alone every pending host gets fetched each wave, so priority only
@@ -68,7 +68,8 @@ def pop_wave(
     unit (≤ 1 per domain, only when budget > domain pool). Composes
     with ``wave_budget`` (domain quotas first, global cut after).
 
-    Returns the popped rows with a ``salted_part`` fetch-partition column,
+    Returns the popped rows with a ``salted_part`` fetch-partition column
+    (computed here: frontier rows store none),
     the host's ``n_lanes`` lane count, which the fetch stage's pacer
     divides the host's rate by, and ``host_popped``, the host's popped
     row count this wave (below ``per_host_k`` for every host, and the
@@ -86,10 +87,8 @@ def pop_wave(
     """
     w = Window.partitionBy("host").orderBy(*[F.col(c).asc() for c in ORDER_COLS])
     wc = Window.partitionBy("host")
-    popped = (
-        frontier.filter(F.col("status") == "pending")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= per_host_k)
+    popped = frontier.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= per_host_k
     )
     if domain_budget is not None:
         popped = _domain_cut(popped, int(domain_budget))
@@ -347,8 +346,8 @@ def expand_endpoints(frontier: DataFrame) -> DataFrame:
 
 
 def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
-    """Lift the seeds table into frontier rows (depth 0, wave 0, pending),
-    with family dispatch and endpoint fan-out applied."""
+    """Lift the seeds table into frontier rows (depth 0, wave 0), with
+    family dispatch and endpoint fan-out applied."""
     # family inlined into the lift Project (it only needs state/layout) —
     # one Project instead of two per wave
     family = F.try_element_at(
@@ -357,7 +356,6 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
     base = seeds.select(
         F.col("url"),
         urlkit.host(F.col("url")).alias("host"),
-        F.lit(0).alias("salted_part"),
         F.lit(0.0).alias("priority"),
         F.lit(0).alias("depth"),
         F.col("event_seq"),
@@ -366,8 +364,7 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
         F.col("state"),
         F.col("layout"),
         F.col("emc"),
-        F.lit("pending").alias("status"),
-        F.lit(0).alias("wave"),
         family.alias("family"),
+        F.lit(0).alias("wave"),
     )
     return expand_endpoints(base)

@@ -4,7 +4,9 @@ The reference's only dedupe is a per-run `visited` list guarding repeated
 XHR captures (il_scraper.py:200–204; ny_scraper.py:203,211–212). The
 engine generalizes it (north rule):
 
-- **Exact path** — left-anti join against the `seen` table. Used at test
+- **Exact path** — ``filter_unseen_exact``: a left-anti join of the
+  candidates against a DataFrame of already-seen URLs (the crawler passes
+  the frontier's URLs; there is no separate seen table). Used at test
   scale and for the parity invariant (identical final seen-set).
 - **Sketch path** — a Bloom bitset or a (deletable) cuckoo table. Any
   sketch with ``add_hashes``/``contains_hashes``/``merge`` shares ONE
@@ -17,8 +19,9 @@ engine generalizes it (north rule):
   semantics — never invent URLs, so the sketch path is safe at 10^10
   scale with an ε·|frontier| re-fetch-suppression budget.
 
-Both paths share the ``filter_unseen_*(candidates, seen, url_col)``
-signature so callers flip with one config knob.
+The exact probe takes a seen DataFrame and the sketch probe takes a
+built sketch, so the crawler picks a path by its ``seen_mode`` and keeps
+the sketch (``seen_bloom``) across waves.
 """
 
 from __future__ import annotations
@@ -85,7 +88,12 @@ class BloomFilter:
         return hit.all(axis=1)
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.m == other.m and self.k == other.k
+        if (self.m, self.k) != (other.m, other.k):
+            raise ValueError(
+                f"Bloom filter shapes differ: (m, k) = {(self.m, self.k)} vs "
+                f"{(other.m, other.k)}; the persisted filter was built with other "
+                "settings (bloom_expected_n / bloom_fpp)"
+            )
         return BloomFilter(self.m, self.k, np.bitwise_or(self.bits, other.bits))
 
     def to_bytes(self) -> bytes:
@@ -249,7 +257,11 @@ class CuckooFilter:
 
     # -- merge / serde ------------------------------------------------------------
     def merge(self, other: "CuckooFilter") -> "CuckooFilter":
-        assert self.m == other.m
+        if self.m != other.m:
+            raise ValueError(
+                f"cuckoo filter shapes differ: m = {self.m} vs {other.m} buckets; "
+                "the persisted filter was built with other settings (expected_n)"
+            )
         out = CuckooFilter(self.m, self.table.copy())
         occ_i, occ_s = np.nonzero(other.table)
         for i, s in zip(occ_i.tolist(), occ_s.tolist()):

@@ -112,13 +112,14 @@ def reprioritize_frontier(
     frontier: DataFrame, host_ranks: DataFrame, unit: int = 1_000_000
 ) -> DataFrame:
     """Feed host-level PageRank back into the crawl frontier:
-    pending rows of ranked hosts get priority = −rank_micro/unit, so
+    rows of ranked hosts get priority = −rank_micro/unit, so
     higher-ranked hosts pop FIRST under the ascending crawl-ordering
     law (priority, event_seq, seed_seq, depth, child_seq) while the
     WITHIN-host order — the reference-parity law — is untouched (the
     law's remaining columns still break ties exactly as before).
-    Unranked hosts keep their current priority; non-pending rows are
-    never rewritten.
+    Unranked hosts keep their current priority. The crawler applies it
+    to the pending set at pop time (Crawler.wave_plan); frontier rows
+    carry no status, so every row of a ranked host is rewritten.
 
     ``host_ranks`` is pagerank_micro output with host strings as the
     node column. Ranks are node-sized (hosts, not URLs) → broadcast;
@@ -129,13 +130,7 @@ def reprioritize_frontier(
     )
     return (
         frontier.join(F.broadcast(r), "host", "left")
-        .withColumn(
-            "priority",
-            F.when(
-                (F.col("status") == "pending") & F.col("_rank_p").isNotNull(),
-                F.col("_rank_p"),
-            ).otherwise(F.col("priority")),
-        )
+        .withColumn("priority", F.coalesce(F.col("_rank_p"), F.col("priority")))
         .drop("_rank_p")
     )
 

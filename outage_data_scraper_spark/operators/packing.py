@@ -13,11 +13,12 @@ re-scanning the corpus.
 
 Scale shape (the whole point at 100 TB):
 
-  1. the global exclusive token offset per document comes from the
-     same two-level distributed prefix sum as ``shards.plan_shards``
-     (level-1 per-chunk windows in parallel; the ONLY single-partition
-     window is over n/chunk chunk totals) — never a row-scale
-     ``Window.orderBy`` with no partitionBy (CLAUDE.md law);
+  1. the global exclusive token offset per document comes from
+     ``shards.exclusive_prefix``, the two-level distributed prefix sum
+     that ``shards.plan_shards`` also runs (level-1 per-chunk windows in
+     parallel; the ONLY single-partition window is over n/chunk chunk
+     totals) — never a row-scale ``Window.orderBy`` with no partitionBy
+     (CLAUDE.md law);
   2. each document explodes to the sequences it touches —
      1 + floor(len/seq_len) rows on average, so the exploded relation
      is ~(total_tokens/seq_len + n_docs) rows, linear in the corpus;
@@ -33,8 +34,10 @@ to the artifact a trainer actually consumes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .shards import exclusive_prefix
 
 
 def pack_sequences(
@@ -61,29 +64,8 @@ def pack_sequences(
     """
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    base = df.filter(F.col(size_col) > 0).select(
-        F.col(order_col).alias("ord"),
-        F.col(size_col).cast("long").alias("size"),
-        F.expr(f"{order_col} DIV {int(chunk)}").alias("chk"),
-    )
-    # two-level exclusive prefix sum (shards.plan_shards pattern):
-    # within-chunk running sum in parallel; chunk offsets from the
-    # group-count-sized level-2 window, broadcast back.
-    w_in = Window.partitionBy("chk").orderBy("ord")
-    within = base.withColumn("cum_in", F.sum("size").over(w_in))
-    w_chk = Window.orderBy("chk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        base.groupBy("chk")
-        .agg(F.sum("size").alias("tot"))
-        .withColumn("off", F.coalesce(F.sum("tot").over(w_chk), F.lit(0)))
-        .select("chk", "off")
-    )
+    spans = exclusive_prefix(df.filter(F.col(size_col) > 0), size_col, order_col, chunk)
     L = int(seq_len)
-    spans = within.join(F.broadcast(offsets), "chk").select(
-        "ord",
-        "size",
-        F.expr("off + cum_in - size").alias("start"),
-    )
     # a doc covering token interval [start, start+size) touches
     # sequences start DIV L .. (start+size-1) DIV L inclusive —
     # integer DIV boundaries, the cross-engine bucketing law.

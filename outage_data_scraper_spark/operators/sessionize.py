@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 
 GROUP_KEYS = ["UtilityName", "StateName", "CountyName", "CityName"]
 
+# buckets the (utility…city) groups hash into for one pandas fold each
+# (_bucketed_apply): many whole groups per Arrow exchange
+GROUP_BUCKETS = 1024
+
 
 def sessionize_sql(
     ts_df: DataFrame,
@@ -89,20 +93,19 @@ _SM_SCHEMA = (
 )
 
 
-def _bucketed_apply(pous, fold, schema, group_buckets, empty):
+def _bucketed_apply(pous, fold, schema, empty):
     """Run a per-(utility…city)-group pandas fold with MANY groups per
     Arrow exchange. groupBy(keys).applyInPandas pays one Arrow round trip
     per group, and AQE's byte-targeting coalescer merges the small
     grouping shuffle into one task — serializing a CPU-heavy Python fold.
-    Grouping by xxhash64(keys) % group_buckets behind an explicit
+    Grouping by xxhash64(keys) % GROUP_BUCKETS behind an explicit
     repartition (exempt from AQE coalescing; already satisfies the
     applyInPandas partitioning requirement, so the plan keeps ONE
-    exchange) restores both amortization and parallelism. Memory per task
-    is bounded by |input|/group_buckets. ``empty`` builds a dtyped empty
-    output frame (a bucket whose groups all fold to zero rows must not
-    hand Arrow object-dtyped columns)."""
-    if group_buckets is None:
-        return pous.groupBy(*GROUP_KEYS).applyInPandas(fold, schema)
+    exchange) restores both amortization and parallelism; results are
+    identical, as every group lands in exactly one bucket. Memory per
+    task is bounded by |input|/GROUP_BUCKETS. ``empty`` builds a dtyped
+    empty output frame (a bucket whose groups all fold to zero rows must
+    not hand Arrow object-dtyped columns)."""
 
     def fold_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         outs = [
@@ -112,9 +115,9 @@ def _bucketed_apply(pous, fold, schema, group_buckets, empty):
         return pd.concat(outs, ignore_index=True) if outs else empty()
 
     bucketed = pous.withColumn(
-        "__bucket", F.pmod(F.xxhash64(*GROUP_KEYS), F.lit(group_buckets))
+        "__bucket", F.pmod(F.xxhash64(*GROUP_KEYS), F.lit(GROUP_BUCKETS))
     )
-    n_tasks = min(group_buckets, pous.sparkSession.sparkContext.defaultParallelism)
+    n_tasks = min(GROUP_BUCKETS, pous.sparkSession.sparkContext.defaultParallelism)
     return (
         bucketed.repartition(n_tasks, "__bucket")
         .groupBy("__bucket")
@@ -126,13 +129,12 @@ def sessionize_threshold_state_machine(
     pous: DataFrame,
     threshold: int = 0,
     abs_diff: int = 50,
-    group_buckets: int | None = 1024,
 ) -> DataFrame:
     """step1_threshold merger semantics (step1_threshold.py:37–200) as a
     per-group ordered fold: a new session opens when customers-out rises
     from ≤threshold; within a session, a jump |Δ| > abs_diff splits a new
     tracked outage (case D); the session closes when customers-out falls
-    to ≤threshold. ``group_buckets``: see _bucketed_apply."""
+    to ≤threshold. Groups fold in hash buckets (_bucketed_apply)."""
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("RecordDateTime")
@@ -203,7 +205,7 @@ def sessionize_threshold_state_machine(
             }
         )
 
-    return _bucketed_apply(pous, fold, _SM_SCHEMA, group_buckets, empty)
+    return _bucketed_apply(pous, fold, _SM_SCHEMA, empty)
 
 
 # -- full step1_threshold merger ------------------------------------------------
@@ -409,7 +411,6 @@ def threshold_merger(
     pous: DataFrame,
     threshold: float = 0.1,
     abs_diff: float = 0.0,
-    group_buckets: int | None = 1024,
 ) -> DataFrame:
     """The reference's FULL step1_threshold pipeline as one distributed
     operator (step1_threshold.py:380–420 outer loop + merger above):
@@ -424,15 +425,10 @@ def threshold_merger(
     Sequential within a (utility, state, county, city) group, parallel
     across groups — groups are plentiful and cadence-bounded.
 
-    ``group_buckets``: the (utility…city) groups are tiny (~10²–10⁴ rows)
-    and plentiful, so one applyInPandas call PER GROUP pays one Arrow
-    round trip each — per-call overhead dominated the fold 5:1 at 1500
-    groups. Grouping instead by xxhash64(keys) % group_buckets ships many
-    whole groups per Arrow exchange and folds each inside with a pandas
-    groupby; results are identical (every group still lands in exactly
-    one bucket). Memory per task is bounded by |input|/group_buckets —
-    size it so a bucket fits an executor (None = one call per group,
-    the minimal-memory fallback).
+    The (utility…city) groups are tiny (~10²–10⁴ rows) and plentiful,
+    so one applyInPandas call PER GROUP pays one Arrow round trip each —
+    per-call overhead dominated the fold 5:1 at 1500 groups. The groups
+    fold in GROUP_BUCKETS hash buckets instead (_bucketed_apply).
     """
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -507,7 +503,7 @@ def threshold_merger(
             }
         )
 
-    return _bucketed_apply(pous, fold, _MERGER_SCHEMA, group_buckets, empty)
+    return _bucketed_apply(pous, fold, _MERGER_SCHEMA, empty)
 
 
 def ganz_events(

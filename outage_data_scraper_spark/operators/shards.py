@@ -33,19 +33,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def plan_shards(
-    df: DataFrame,
-    size_col: str,
-    order_col: str,
-    shard_bytes: int,
-    chunk: int = 4096,
+def exclusive_prefix(
+    df: DataFrame, size_col: str, order_col: str, chunk: int = 4096
 ) -> DataFrame:
-    """Per-document shard assignment: (order_col, size, shard_id).
-    Deterministic in ``order_col`` (must be unique); sequential packing
-    with overflow at the boundary — shard_id = (exclusive running
-    size) DIV shard_bytes."""
-    if shard_bytes <= 0:
-        raise ValueError("shard_bytes must be positive")
+    """(ord, size, start): each row's exclusive running sum of
+    ``size_col`` in ``order_col`` order (must be unique), as the
+    two-level prefix sum of the module docstring."""
     base = df.select(
         F.col(order_col).alias("ord"),
         F.col(size_col).cast("long").alias("size"),
@@ -63,13 +56,28 @@ def plan_shards(
         .withColumn("off", F.coalesce(F.sum("tot").over(w_chk), F.lit(0)))
         .select("chk", "off")
     )
-    return (
-        within.join(F.broadcast(offsets), "chk")
-        .select(
-            F.col("ord").alias(order_col),
-            F.col("size"),
-            F.expr(f"(off + cum_in - size) DIV {int(shard_bytes)}").alias("shard_id"),
-        )
+    return within.join(F.broadcast(offsets), "chk").select(
+        "ord", "size", F.expr("off + cum_in - size").alias("start")
+    )
+
+
+def plan_shards(
+    df: DataFrame,
+    size_col: str,
+    order_col: str,
+    shard_bytes: int,
+    chunk: int = 4096,
+) -> DataFrame:
+    """Per-document shard assignment: (order_col, size, shard_id).
+    Deterministic in ``order_col`` (must be unique); sequential packing
+    with overflow at the boundary — shard_id = (exclusive running
+    size) DIV shard_bytes."""
+    if shard_bytes <= 0:
+        raise ValueError("shard_bytes must be positive")
+    return exclusive_prefix(df, size_col, order_col, chunk).select(
+        F.col("ord").alias(order_col),
+        F.col("size"),
+        F.expr(f"start DIV {int(shard_bytes)}").alias("shard_id"),
     )
 
 

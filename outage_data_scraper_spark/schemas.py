@@ -54,15 +54,17 @@ SEEDS = StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Frontier: the distributed priority queue. status ∈ {pending, fetched,
-# failed}. Sort key (priority, event_seq, seed_seq, depth, child_seq) is a
-# refinement of the reference's sequential order (SURVEY.md §7.3).
+# Frontier: the distributed priority queue as an append-only enqueue log.
+# A row carries no status: a URL is pending while fetch_log holds no fetch
+# of it (frontier/crawler.py:Crawler.pending), and the fetch partition is
+# computed at pop time (priority.pop_wave). Sort key (priority, event_seq,
+# seed_seq, depth, child_seq) is a refinement of the reference's
+# sequential order (SURVEY.md §7.3).
 # ---------------------------------------------------------------------------
 FRONTIER = StructType(
     [
         StructField("url", StringType(), False),
         StructField("host", StringType(), False),
-        StructField("salted_part", IntegerType(), False),
         StructField("priority", DoubleType(), False),
         StructField("depth", IntegerType(), False),
         StructField("event_seq", IntegerType(), False),
@@ -72,7 +74,6 @@ FRONTIER = StructType(
         StructField("layout", StringType(), True),
         StructField("emc", StringType(), True),
         StructField("family", StringType(), True),
-        StructField("status", StringType(), False),
         StructField("wave", IntegerType(), False),
     ]
 )
@@ -134,8 +135,9 @@ FETCH_LOG = StructType(
 
 # Long-format extracted records: one row per (url, level, record). `data`
 # is the record as canonical JSON; per-family typed views come from
-# F.from_json with the family schema. `text` is the byte-identical
-# extracted-text invariant target (BASELINE.json input_hint).
+# F.from_json with the family schema. A page's extracted text, the
+# byte-identical invariant target (BASELINE.json input_hint), is its
+# `pages` row.
 RECORDS = StructType(
     [
         StructField("url", StringType(), False),
@@ -144,7 +146,6 @@ RECORDS = StructType(
         StructField("emc", StringType(), True),
         StructField("level", StringType(), False),
         StructField("data", StringType(), False),
-        StructField("text", StringType(), True),
         StructField("run_ts", TimestampType(), False),
         StructField("wave", IntegerType(), False),
     ]

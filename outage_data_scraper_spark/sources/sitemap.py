@@ -127,7 +127,6 @@ def frontier_rows_from_sitemap(
     return urls.select(
         "url",
         urlkit.host(F.col("url")).alias("host"),
-        F.lit(0).cast("int").alias("salted_part"),
         (-F.coalesce(F.col("sm_priority"), F.lit(default_priority))).alias("priority"),
         F.lit(0).cast("int").alias("depth"),
         F.lit(event_seq).cast("int").alias("event_seq"),
@@ -137,6 +136,5 @@ def frontier_rows_from_sitemap(
         F.lit(None).cast("string").alias("layout"),
         F.lit(None).cast("string").alias("emc"),
         F.lit("cc").alias("family"),
-        F.lit("pending").alias("status"),
         F.lit(0).cast("int").alias("wave"),
     )

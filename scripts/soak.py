@@ -629,13 +629,11 @@ def soak_q112(inp: Inputs, out: dict) -> None:
         .select(
             F.concat(F.lit("https://"), host, F.lit("/p/"), F.col("id")).alias("url"),
             host.alias("host"),
-            F.lit(0).alias("salted_part"),
             (F.col("id") % 7).cast("double").alias("priority"),
             F.lit(0).alias("depth"),
             (F.col("id") % 11).cast("int").alias("event_seq"),
             F.col("id").cast("int").alias("seed_seq"),
             F.lit(0).alias("child_seq"),
-            F.lit("pending").alias("status"),
         )
         .repartition(64)
         .localCheckpoint(eager=True)

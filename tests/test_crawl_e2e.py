@@ -307,6 +307,82 @@ def test_bloom_state_persists_across_waves(spark, tmp_path_factory):
     assert urls == set(reference_order(spark))
 
 
+def test_bloom_settings_changed_on_resume_raise(spark, tmp_path_factory):
+    """A Bloom crawl reopened with another bloom_expected_n sizes its new
+    bitset differently from the persisted one: the wave's merge raises a
+    ValueError naming both shapes, and no wave commits."""
+    root = str(tmp_path_factory.mktemp("crawl-bloomshape"))
+    cat = SnapshotCatalog(root)
+    kw = dict(per_host_k=4, num_parts=8, rate_per_host=100.0, seen_mode="bloom")
+    Crawler(spark, cat, make_fixture_fetcher, **kw).bootstrap(fixture_miniweb_seeds(spark))
+    c = Crawler(spark, cat, make_fixture_fetcher, bloom_expected_n=1_000, **kw)
+    assert c.resume() == 1
+    with pytest.raises(ValueError, match=r"\(m, k\).*persisted filter was built with other"):
+        c.run(max_waves=30)
+    assert c.last_committed_wave() == 0
+
+
+def _first_discoveries_input(spark):
+    from outage_data_scraper_spark.parsers.parse import PARSE_OUT_SCHEMA
+
+    return spark.createDataFrame(
+        [("http://a.com/", "a.com", None, None, None, None, 0, 0, 0, 0, 1, 10, 0, 1,
+          "child", None, None, None, "http://a.com/x", 0, 200, None)],
+        PARSE_OUT_SCHEMA,
+    )
+
+
+def _sitemap_input(spark):
+    from outage_data_scraper_spark.sources.sitemap import SITEMAP_SCHEMA
+
+    return spark.createDataFrame(
+        [("http://a.com/", None, None, 0.9, "url", 0, "a.xml")], SITEMAP_SCHEMA
+    )
+
+
+@pytest.mark.parametrize("builder", ["seeds", "first_discoveries", "sitemap"])
+def test_frontier_row_builders_match_schema(spark, builder):
+    """Every frontier row builder yields exactly schemas.FRONTIER's
+    fields and types, in order: no column the table does not declare."""
+    from outage_data_scraper_spark import schemas
+    from outage_data_scraper_spark.frontier.crawler import first_discoveries
+    from outage_data_scraper_spark.frontier.priority import seeds_to_frontier
+    from outage_data_scraper_spark.sources.sitemap import frontier_rows_from_sitemap
+
+    df = {
+        "seeds": lambda: seeds_to_frontier(fixture_miniweb_seeds(spark)),
+        "first_discoveries": lambda: first_discoveries(_first_discoveries_input(spark), 1),
+        "sitemap": lambda: frontier_rows_from_sitemap(_sitemap_input(spark)),
+    }[builder]()
+    got = [(f.name, f.dataType) for f in df.schema.fields]
+    assert got == [(f.name, f.dataType) for f in schemas.FRONTIER.fields]
+
+
+def test_catalog_with_status_columns_resumes(spark, crawled, tmp_path_factory):
+    """A catalog whose frontier was written with the former ``status`` and
+    ``salted_part`` columns still resumes and crawls to the same fetch_log
+    URL set as a fresh crawl: reads select schemas.FRONTIER's fields."""
+    from outage_data_scraper_spark.frontier.priority import seeds_to_frontier
+
+    root = str(tmp_path_factory.mktemp("crawl-oldfrontier"))
+    cat = SnapshotCatalog(root)
+    old = seeds_to_frontier(fixture_miniweb_seeds(spark)).select(
+        "url", "host", F.lit(0).alias("salted_part"), "priority", "depth",
+        "event_seq", "seed_seq", "child_seq", "state", "layout", "emc",
+        F.lit("pending").alias("status"), "wave", "family",
+    )
+    cat.write("frontier", old, mode="overwrite", wave=0)
+    assert {"status", "salted_part"} <= set(cat.read(spark, "frontier").columns)
+    c = Crawler(spark, cat, make_fixture_fetcher, per_host_k=4, num_parts=8,
+                salt=1, rate_per_host=100.0)
+    assert c.resume() == 1
+    c.run(max_waves=30)
+    fresh, _ = crawled
+    assert sorted(r.url for r in c.fetch_log().select("url").collect()) == sorted(
+        r.url for r in fresh.fetch_log().select("url").collect()
+    )
+
+
 def test_bloom_crawl_reads_seen_bloom_once_per_wave(spark, tmp_path_factory, monkeypatch):
     """The child chain probes with the bitset it loads and ORs the wave's
     new URLs into that same bitset: one seen_bloom read per wave, also on
@@ -341,14 +417,13 @@ def test_budget_cuts_reject_null_law_column(spark):
 
     fr = spark.createDataFrame(
         [
-            (f"http://h{i}.x.net/{i}", f"h{i}.x.net", 0, None if i == 3 else float(i),
-             0, i, 0, 0, None, None, None, None, "pending", 0)
+            (f"http://h{i}.x.net/{i}", f"h{i}.x.net", None if i == 3 else float(i),
+             0, i, 0, 0, None, None, None, None, 0)
             for i in range(6)
         ],
-        "url string, host string, salted_part int, priority double, "
+        "url string, host string, priority double, "
         "depth int, event_seq int, seed_seq int, child_seq int, "
-        "state string, layout string, emc string, family string, "
-        "status string, wave int",
+        "state string, layout string, emc string, family string, wave int",
     )
     with pytest.raises(ValueError, match="NULLs in order column.*priority"):
         pop_wave(fr, per_host_k=2, num_parts=4, wave_budget=2).collect()
@@ -448,16 +523,15 @@ def test_wave_budget_cut_exact_vs_sorted_limit(spark):
             host = f"h{rng.randrange(40)}.x.net"
             prio = 0.0 if trial == 0 else -rng.randrange(5) / 7.0
             rows.append(
-                (f"http://{host}/{i}", host, 0, prio, rng.randrange(3),
+                (f"http://{host}/{i}", host, prio, rng.randrange(3),
                  0 if trial < 2 else rng.randrange(2), i, rng.randrange(4),
-                 None, None, None, None, "pending", 0)
+                 None, None, None, None, 0)
             )
         fr = spark.createDataFrame(
             rows,
-            "url string, host string, salted_part int, priority double, "
+            "url string, host string, priority double, "
             "depth int, event_seq int, seed_seq int, child_seq int, "
-            "state string, layout string, emc string, family string, "
-            "status string, wave int",
+            "state string, layout string, emc string, family string, wave int",
         ).repartition(8)
         got = sorted(
             r.url
@@ -485,20 +559,19 @@ def test_domain_budget_pop_fairness(spark):
     # registrants with 10 pending each (1000 total pending)
     for i in range(950):
         host = f"h{i % 19}.mega.com"
-        rows.append((f"http://{host}/{i}", host, 0, 0.0, 0, 0, i, 0,
-                     None, None, None, None, "pending", 0))
+        rows.append((f"http://{host}/{i}", host, 0.0, 0, 0, i, 0,
+                     None, None, None, None, 0))
     for d in range(5):
         for i in range(10):
             host = f"w.site{d}.org.uk"
-            rows.append((f"http://{host}/{i}", host, 0, 0.0, 0, 0,
+            rows.append((f"http://{host}/{i}", host, 0.0, 0, 0,
                          10_000 + d * 100 + i, 0,
-                         None, None, None, None, "pending", 0))
+                         None, None, None, None, 0))
     fr = spark.createDataFrame(
         rows,
-        "url string, host string, salted_part int, priority double, "
+        "url string, host string, priority double, "
         "depth int, event_seq int, seed_seq int, child_seq int, "
-        "state string, layout string, emc string, family string, "
-        "status string, wave int",
+        "state string, layout string, emc string, family string, wave int",
     ).repartition(8)
     popped = pop_wave(fr, per_host_k=100, num_parts=8, domain_budget=100)
     got = popped.collect()
@@ -522,16 +595,15 @@ def test_domain_budget_quota_exceeding_pool_forfeits_unit(spark):
 
     rows = []
     for i in range(99):
-        rows.append((f"http://a.big.com/{i}", "a.big.com", 0, 0.0, 0, 0, i,
-                     0, None, None, None, None, "pending", 0))
-    rows.append(("http://b.tiny.com/0", "b.tiny.com", 0, 0.0, 0, 0, 999, 0,
-                 None, None, None, None, "pending", 0))
+        rows.append((f"http://a.big.com/{i}", "a.big.com", 0.0, 0, 0, i,
+                     0, None, None, None, None, 0))
+    rows.append(("http://b.tiny.com/0", "b.tiny.com", 0.0, 0, 0, 999, 0,
+                 None, None, None, None, 0))
     fr = spark.createDataFrame(
         rows,
-        "url string, host string, salted_part int, priority double, "
+        "url string, host string, priority double, "
         "depth int, event_seq int, seed_seq int, child_seq int, "
-        "state string, layout string, emc string, family string, "
-        "status string, wave int",
+        "state string, layout string, emc string, family string, wave int",
     ).repartition(4)
     got = pop_wave(fr, per_host_k=200, num_parts=8, domain_budget=100).collect()
     # big: floor(100*99/100)=99 → 99 kept; tiny: floor(1)=1 → 1 kept
@@ -628,13 +700,12 @@ def test_domain_cut_histogram_equals_naive_rank(spark):
             pr = 0.0 if const_law else float(rng.randrange(4))
             ev = 0 if const_law else rng.randrange(6)
             rows.append(
-                (f"http://{host}/{i}", host, 0, pr, 0, ev, i, 0, "pending")
+                (f"http://{host}/{i}", host, pr, 0, ev, i, 0)
             )
         fr = spark.createDataFrame(
             rows,
-            "url string, host string, salted_part int, priority double, "
-            "depth int, event_seq int, seed_seq int, child_seq int, "
-            "status string",
+            "url string, host string, priority double, "
+            "depth int, event_seq int, seed_seq int, child_seq int",
         ).repartition(8)
         for budget in (1, 50, n // 3, n, n * 2):
             got = sorted(

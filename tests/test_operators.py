@@ -3,6 +3,7 @@
 import pandas as pd
 from pyspark.sql import functions as F
 
+from outage_data_scraper_spark import schemas
 from outage_data_scraper_spark.frontier.politeness import HostPacer, SimClock, TokenBucket
 from outage_data_scraper_spark.operators import dedup, multimodal, pii, similarity
 from outage_data_scraper_spark.operators.sessionize import (
@@ -1128,8 +1129,7 @@ def test_pagerank_micro_matches_sequential_reference(spark):
 
 def test_reprioritize_frontier_pagerank_feedback(spark):
     """Host PageRank feeds the frontier: the ranked host pops before
-    priority-0 hosts, within-host reference order is untouched, and
-    non-pending rows keep their priority."""
+    priority-0 hosts and within-host reference order is untouched."""
     from outage_data_scraper_spark.frontier.priority import pop_wave
     from outage_data_scraper_spark.operators.graph import (
         pagerank_micro, reprioritize_frontier,
@@ -1139,17 +1139,10 @@ def test_reprioritize_frontier_pagerank_feedback(spark):
     for h, host in enumerate(["a.com", "b.com", "c.com"]):
         for i in range(3):
             rows.append(
-                (f"http://{host}/{i}", host, 0, 0.0, 0, h, i, 0,
-                 None, None, None, None, "pending", 0)
+                (f"http://{host}/{i}", host, 0.0, 0, h, i, 0,
+                 None, None, None, None, 0)
             )
-    rows.append(("http://a.com/done", "a.com", 0, 0.0, 0, 0, 9, 0,
-                 None, None, None, None, "fetched", 0))
-    frontier = spark.createDataFrame(
-        rows,
-        "url string, host string, salted_part int, priority double, depth int, "
-        "event_seq int, seed_seq int, child_seq int, state string, layout string, "
-        "emc string, family string, status string, wave int",
-    )
+    frontier = spark.createDataFrame(rows, schemas.FRONTIER)
     # c.com is the hub: a→c, b→c, c→a
     edges = spark.createDataFrame(
         [("a.com", "c.com"), ("b.com", "c.com"), ("c.com", "a.com")],
@@ -1163,9 +1156,6 @@ def test_reprioritize_frontier_pagerank_feedback(spark):
     assert rmap["c.com"] == max(rmap.values())
 
     re_f = reprioritize_frontier(frontier, ranks)
-    # fetched row untouched
-    done = re_f.filter(F.col("status") == "fetched").first()
-    assert done.priority == 0.0
     popped = pop_wave(re_f, per_host_k=2, num_parts=4).collect()
     by_host = {}
     for r in sorted(popped, key=lambda r: (r.priority, r.seed_seq)):

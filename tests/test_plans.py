@@ -657,13 +657,11 @@ def test_domain_cut_quotas_broadcast(spark):
     fr = spark.range(5000).selectExpr(
         "concat('https://h', id % 40, '.dom', id % 6, '.com/p/', id) AS url",
         "concat('h', id % 40, '.dom', id % 6, '.com') AS host",
-        "0 AS salted_part",
         "CAST(id % 3 AS DOUBLE) AS priority",
         "0 AS depth",
         "CAST(id % 5 AS INT) AS event_seq",
         "CAST(id AS INT) AS seed_seq",
         "0 AS child_seq",
-        "'pending' AS status",
     )
     plan = formatted_plan(pop_wave(fr, per_host_k=10, num_parts=8, domain_budget=100))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan

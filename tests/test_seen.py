@@ -147,6 +147,19 @@ def test_cuckoo_merge_by_reinsertion():
     assert m.contains_hashes(h1b, h2b).all()
 
 
+def test_sketch_merge_shape_mismatch_raises():
+    """Merging sketches of different shapes is a settings error (a crawl
+    resumed with other Bloom sizing), reported as ValueError, not an
+    assert."""
+    from outage_data_scraper_spark.frontier.seen import CuckooFilter
+
+    a, b = BloomFilter.sized(1000, 1e-4), BloomFilter.sized(100_000, 1e-4)
+    with pytest.raises(ValueError, match=rf"\({a.m}, {a.k}\) vs \({b.m}, {b.k}\)"):
+        a.merge(b)
+    with pytest.raises(ValueError, match="other settings"):
+        CuckooFilter.sized(1000).merge(CuckooFilter.sized(8000))
+
+
 def test_cuckoo_roundtrip_and_capacity():
     import numpy as np
     import pytest as _pytest
